@@ -16,7 +16,7 @@ the tz-naive DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -143,3 +143,45 @@ def dec_fw(m: Column, nbytes: int = 8) -> Column:
     return F.regexp_replace(
         F.unhex(F.lpad(F.hex(m), 2 * nbytes, "0")).cast("string"), "\x00+$", ""
     )
+
+
+def _fs_and_path(spark: SparkSession, path: str):
+    """Hadoop FileSystem + Path for *path* (works for local and HDFS/object
+    stores alike -- the maintenance ops must not assume a local disk)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _replace_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Swap a fully-written *src* directory into place at *dst*.
+
+    Write-to-temp-then-swap is how every rewrite of a table we are also
+    reading from happens here: Spark reads lazily, so ``mode("overwrite")``
+    onto a path in the plan's lineage would delete the input mid-job.
+    Materialize to ``<table>.tmp`` first (the write action completes before
+    the swap), then delete + rename -- both metadata ops.
+
+    A failed rename is re-checked before raising: another process that
+    observes this swap mid-window (dst deleted, tmp not yet renamed) may
+    complete it with the SAME rename. Whichever process loses that race sees
+    ``fs.rename() == false`` with the destination already in place and the
+    source gone -- the swap it wanted is complete, so that outcome is
+    success, not an error. Only a rename failure where the swap is NOT
+    complete (src still present, or dst still missing) raises."""
+    fs, dst_path = _fs_and_path(spark, dst)
+    _, src_path = _fs_and_path(spark, src)
+    if fs.exists(dst_path):
+        fs.delete(dst_path, True)
+    try:
+        renamed = fs.rename(src_path, dst_path)
+        cause = None
+    except Exception as exc:  # noqa: BLE001 -- RawLocalFileSystem raises
+        # FileNotFoundException (not false) when src is already gone
+        renamed, cause = False, exc
+    if not renamed:
+        if fs.exists(dst_path) and not fs.exists(src_path):
+            return  # a concurrent process completed this exact swap
+        # chain the original failure: an AccessControlException /
+        # safe-mode / quota error must stay distinguishable from the
+        # benign consumed-src race above
+        raise IOError(f"failed to move {src} into place at {dst}") from cause

@@ -122,8 +122,8 @@ def merge_into(spark: SparkSession, base_path: str, changes: DataFrame) -> list[
     'U'/'I' upsert the carried row, 'D' removes the key. Only affected
     bucket partitions are read or rewritten.
 
-    Write-materialize-then-swap discipline (same as ``engine._replace_dir``
-    users): the merged buckets are fully written to a sibling ``.tmp`` dir
+    Write-materialize-then-swap discipline (``_util._replace_dir``): the
+    merged buckets are fully written to a sibling ``.tmp`` dir
     FIRST (so the read of *base_path* and the write never share a path --
     no reliance on read-while-overwrite behavior), then each affected
     ``bucket=`` directory is swapped in with metadata-only renames. A
@@ -134,7 +134,7 @@ def merge_into(spark: SparkSession, base_path: str, changes: DataFrame) -> list[
     (Delta/Iceberg); per-bucket rename is the strongest contract plain
     parquet offers.
     """
-    from ..engine import _fs_and_path, _replace_dir
+    from ._util import _fs_and_path, _replace_dir
 
     changes = changes.withColumn("bucket", _bucket(F.col("o_orderkey")))
     affected = sorted(

@@ -79,10 +79,17 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("search-cli")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        # a complete index always has the meta table; absent -> (re)build
-        if args.rebuild or not os.path.isdir(f"{index_dir}/meta"):
+        # an index is a published commit; without one, build -- unless the
+        # directory holds something else (a legacy layout), which must not
+        # be silently replaced
+        if args.rebuild or not os.path.exists(index_dir):
             print(f"Building index from {args.corpus} -> {index_dir}", file=sys.stderr)
             engine.build_index(load_reference_corpus(spark, args.corpus), index_dir)
+        try:
+            engine.snapshot(spark, index_dir)
+        except ValueError as exc:
+            print(f"{exc} (or pass --rebuild)", file=sys.stderr)
+            return 2
         for row in engine.search(spark, index_dir, query, k=args.k).collect():
             print(f"{row['rank']}\t{row['doc_id']}\t{row['title']}\t{row['score']}")
     finally:

@@ -927,8 +927,8 @@ def compact_table_files(spark: SparkSession, path: str, target_bytes: int) -> in
     (driver-side, metadata-sized -- same class as the compaction
     trigger's own file stats) decides the output count; the data path is
     one ``repartition(n)`` rewrite to ``<path>.tmp`` swapped in with the
-    same write-materialize-then-rename discipline as the index
-    compaction (``engine._replace_dir``)."""
+    same write-materialize-then-rename discipline as
+    ``merge.merge_into`` (``operators._util._replace_dir``)."""
     import math
     import os
 
@@ -947,7 +947,7 @@ def compact_table_files(spark: SparkSession, path: str, target_bytes: int) -> in
             "(empty, non-parquet, or not yet written)"
         )
     n_out = max(1, math.ceil(total / target_bytes))
-    from ..engine import _replace_dir
+    from ..operators._util import _replace_dir
 
     (
         spark.read.parquet(path)

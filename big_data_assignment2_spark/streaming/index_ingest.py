@@ -15,11 +15,12 @@ from scratch (``app/index.sh`` re-runs both MapReduce jobs).
 
 Exactly-once: ``foreachBatch`` redelivers a batch after a mid-batch
 failure, so each append is keyed by the sink-side ``batch_id`` Spark
-hands the callback -- ``engine.append_to_index(batch_df, index_dir,
-batch_id=batch_id)`` is fully idempotent under redelivery (committed-
-batch ledger + filename-keyed staged renames + a vocab marker riding
-the atomic swap; see its docstring). ``tests/test_engine.py`` applies
-the same batch twice and asserts the index state is unchanged.
+hands the callback. Each append publishes one index commit that records
+its batch id, so ``engine.append_to_index(batch_df, index_dir,
+batch_id=batch_id)`` is a no-op for a batch already committed, and a
+delivery that failed before its commit left nothing to undo.
+``tests/test_engine.py`` redelivers committed and failed batches and
+asserts the index state.
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = index_build.documents_with_title(spark, sf_dir)
 
     # Each micro-batch append runs several SMALL Spark jobs (postings/
-    # forward/doc_stats writes, vocab merge, meta rewrite) over one
+    # forward/doc_stats writes, vocab merge, batch counts) over one
     # batch's worth of docs -- at the default 32 shuffle partitions the
     # fixed per-task overhead dominates every one of them. Pin the
     # shuffle width down for the ingestion the way _run_to_table pins
@@ -95,8 +96,8 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
         if not finished:
-            # a torn append leaves the index stats inconsistent with its
-            # postings -- fail loudly, never search a half-ingested index
+            # an unfinished stream committed only some batches -- fail
+            # loudly, never search a half-ingested index
             raise RuntimeError("streaming_index_append did not finish within 300s")
         # localize the (top-10) result so the uuid scratch root can be
         # deleted before returning -- the sibling uuid-rooted streaming

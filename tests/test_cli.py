@@ -19,14 +19,14 @@ from big_data_assignment2_spark.sources.reference_corpus import (
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-pytestmark = pytest.mark.skipif(
+needs_fixture = pytest.mark.skipif(
     not os.path.isdir(REFERENCE_DATA_DIR), reason="reference fixture not present"
 )
 
 
-def _run_cli(scratch: str, argv: list[str], stdin: str | None = None) -> list[str]:
+def _cli(scratch: str, argv: list[str], stdin: str | None = None):
     env = dict(os.environ, SPARK_GRAFT_SCRATCH=scratch, SPARK_GRAFT_CPUS="8")
-    proc = subprocess.run(
+    return subprocess.run(
         [sys.executable, "-m", "big_data_assignment2_spark.search", *argv],
         cwd=REPO,
         env=env,
@@ -35,10 +35,15 @@ def _run_cli(scratch: str, argv: list[str], stdin: str | None = None) -> list[st
         text=True,
         timeout=300,
     )
+
+
+def _run_cli(scratch: str, argv: list[str], stdin: str | None = None) -> list[str]:
+    proc = _cli(scratch, argv, stdin)
     assert proc.returncode == 0, proc.stderr[-2000:]
     return [l for l in proc.stdout.splitlines() if l.strip()]
 
 
+@needs_fixture
 def test_cli_answers_app_sh_smoke_queries(spark, tmp_path):
     scratch = str(tmp_path)  # index built by the first invocation, reused after
     queries = list(SMOKE_QUERIES.values())
@@ -57,6 +62,38 @@ def test_cli_answers_app_sh_smoke_queries(spark, tmp_path):
         assert len(lines) == 10
         ranks = [int(l.split("\t")[0]) for l in lines]
         assert ranks == list(range(1, 11))
+
+
+def test_cli_reuses_committed_index_and_rejects_legacy_dir(tmp_path):
+    """The CLI builds only where no index exists. A committed index is
+    reused as is (no rebuild from --corpus); a directory in the legacy
+    in-place layout is neither searched nor silently replaced -- it exits
+    non-zero with the rebuild message until --rebuild is passed."""
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    texts = {1: "spark builds an index", 2: "cassandra stores the index", 3: "spark spark"}
+    for doc_id, text in texts.items():
+        (corpus / f"{doc_id}_doc{doc_id}.txt").write_text(text)
+    index_dir = tmp_path / "index"
+    (index_dir / "meta").mkdir(parents=True)  # the legacy layout's tables
+    (index_dir / "meta" / "part-0.parquet").write_text("legacy")
+    argv = ["--corpus", str(corpus), "--index-dir", str(index_dir), "spark"]
+
+    legacy = _cli(str(tmp_path), argv)
+    assert legacy.returncode != 0
+    assert "rebuild" in legacy.stderr and not legacy.stdout.strip()
+
+    rebuilt = _cli(str(tmp_path), [*argv, "--rebuild"])
+    assert rebuilt.returncode == 0, rebuilt.stderr[-2000:]
+    assert "Building index" in rebuilt.stderr
+    lines = [l.split("\t") for l in rebuilt.stdout.splitlines() if l.strip()]
+    assert [(l[0], l[1]) for l in lines] == [("1", "3"), ("2", "1")]
+
+    (corpus / "1_doc1.txt").unlink()  # a rebuild from --corpus would differ
+    reused = _cli(str(tmp_path), argv)
+    assert reused.returncode == 0, reused.stderr[-2000:]
+    assert "Building index" not in reused.stderr
+    assert reused.stdout == rebuilt.stdout
 
 
 def test_cli_empty_query_errors(tmp_path):

@@ -98,16 +98,31 @@ def test_bm25_topk_and_no_python(spark, sf_dir):
 
 
 def test_persisted_search_prunes_buckets(spark, sf_dir, tmp_path):
+    import os
+    from urllib.parse import urlparse
+
     from big_data_assignment2_spark import engine
+    from big_data_assignment2_spark.functions.text import tokenize_query
     from big_data_assignment2_spark.operators import index_build
 
     d = str(tmp_path / "idx")
-    engine.build_index(
-        index_build.documents_with_title(spark, sf_dir), d, n_buckets=8
+    docs = index_build.documents_with_title(spark, sf_dir)
+    engine.build_index(docs, d, n_buckets=8)
+    engine.delete_from_index(docs.limit(3).select("doc_id"), d)
+    q = "data model"
+    df = engine.search(spark, d, q)
+    # the scan reads exactly the committed postings files of the query's
+    # term buckets (picked driver-side), plus vocab, doc_stats and
+    # tombstones -- no other postings file is listed or read
+    snap = engine.snapshot(spark, d)
+    buckets = {engine.term_bucket_py(t, 8) for t in tokenize_query(q)}
+    postings = {p for p in snap.files["inverted_index"] if engine._bucket(p) in buckets}
+    assert 0 < len(postings) < len(snap.files["inverted_index"])
+    want = postings.union(
+        *(snap.files[t] for t in ("vocab", "doc_stats", "tombstones"))
     )
-    df = engine.search(spark, d, "data model")
-    # partition-column filter present => bucket directories pruned
-    assert not audit(df, requires=("term_bucket",))
+    assert snap.files["tombstones"]
+    assert {os.path.relpath(urlparse(f).path, d) for f in df.inputFiles()} == want
 
 
 @pytest.mark.parametrize(

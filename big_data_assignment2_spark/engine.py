@@ -659,12 +659,18 @@ def delete_from_index(doc_ids: DataFrame, index_dir: str) -> None:
     # one materialization feeds the tombstone file, the df delta and the
     # stats delta, so all three see the same id set
     ids = ids.localCheckpoint(eager=True)
-    if ids.isEmpty():
+    buckets = {
+        r["b"]
+        for r in ids.select(term_bucket_col("doc_id", base.n_buckets).alias("b"))
+        .distinct()
+        .collect()
+    }
+    if not buckets:
         return
     out = f"data/{uuid.uuid4().hex}"
     vocab = (
         _read(spark, base, "vocab")
-        .join(_df_delta_for_ids(spark, base, ids), "term", "left")
+        .join(_df_delta_for_ids(spark, base, ids, buckets), "term", "left")
         .select(
             "term",
             (F.col("doc_freq") - F.coalesce(F.col("delta_df"), F.lit(0))).alias(
@@ -696,17 +702,13 @@ def delete_from_index(doc_ids: DataFrame, index_dir: str) -> None:
     )
 
 
-def _df_delta_for_ids(spark: SparkSession, snap: Snapshot, ids: DataFrame) -> DataFrame:
+def _df_delta_for_ids(
+    spark: SparkSession, snap: Snapshot, ids: DataFrame, buckets: set[int]
+) -> DataFrame:
     """Per-term df of the given doc ids, read from only the committed
-    forward files of the ids' doc buckets (<= |batch| distinct buckets,
-    collected driver-side -- the file pick is what turns the delta into
-    a fraction of one postings scan; asserted in tests/test_engine.py)."""
-    buckets = {
-        r["b"]
-        for r in ids.select(term_bucket_col("doc_id", snap.n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    }
+    forward files of *buckets*, the ids' doc buckets (<= |batch|, collected
+    driver-side -- the file pick is what turns the delta into a fraction
+    of one postings scan; asserted in tests/test_engine.py)."""
     files = [p for p in snap.files["forward"] if _bucket(p) in buckets]
     return (
         _read(spark, snap, "forward", files)

@@ -25,6 +25,9 @@ import argparse
 import os
 import sys
 
+# the table directories of the in-place layout that predates the commit log
+_LEGACY_TABLES = ("meta", "doc_stats", "inverted_index", "vocab", "forward", "tombstones")
+
 
 def _resolve_query(args_query: list[str]) -> str:
     """argv joined, else piped stdin, else interactive prompt
@@ -80,16 +83,21 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         # an index is a published commit; without one, build -- unless the
-        # directory holds something else (a legacy layout), which must not
-        # be silently replaced
-        if args.rebuild or not os.path.exists(index_dir):
-            print(f"Building index from {args.corpus} -> {index_dir}", file=sys.stderr)
-            engine.build_index(load_reference_corpus(spark, args.corpus), index_dir)
+        # directory holds the legacy in-place layout's tables, which must
+        # not be silently replaced (a crashed first build leaves only data/)
+        build = args.rebuild
         try:
             engine.snapshot(spark, index_dir)
         except ValueError as exc:
-            print(f"{exc} (or pass --rebuild)", file=sys.stderr)
-            return 2
+            if not build and any(
+                os.path.exists(os.path.join(index_dir, t)) for t in _LEGACY_TABLES
+            ):
+                print(f"{exc} (or pass --rebuild)", file=sys.stderr)
+                return 2
+            build = True
+        if build:
+            print(f"Building index from {args.corpus} -> {index_dir}", file=sys.stderr)
+            engine.build_index(load_reference_corpus(spark, args.corpus), index_dir)
         for row in engine.search(spark, index_dir, query, k=args.k).collect():
             print(f"{row['rank']}\t{row['doc_id']}\t{row['title']}\t{row['score']}")
     finally:

@@ -68,7 +68,8 @@ def test_cli_reuses_committed_index_and_rejects_legacy_dir(tmp_path):
     """The CLI builds only where no index exists. A committed index is
     reused as is (no rebuild from --corpus); a directory in the legacy
     in-place layout is neither searched nor silently replaced -- it exits
-    non-zero with the rebuild message until --rebuild is passed."""
+    non-zero with the rebuild message until --rebuild is passed. A crashed
+    first build (data/ but no commit) is not a legacy layout: it builds."""
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     texts = {1: "spark builds an index", 2: "cassandra stores the index", 3: "spark spark"}
@@ -94,6 +95,15 @@ def test_cli_reuses_committed_index_and_rejects_legacy_dir(tmp_path):
     assert reused.returncode == 0, reused.stderr[-2000:]
     assert "Building index" not in reused.stderr
     assert reused.stdout == rebuilt.stdout
+
+    crashed = tmp_path / "crashed"
+    (crashed / "data" / "0" / "vocab").mkdir(parents=True)
+    (crashed / "data" / "0" / "vocab" / "part-0.parquet").write_text("orphan")
+    built = _cli(str(tmp_path), ["--corpus", str(corpus), "--index-dir", str(crashed), "spark"])
+    assert built.returncode == 0, built.stderr[-2000:]
+    assert "Building index" in built.stderr
+    lines = [l.split("\t") for l in built.stdout.splitlines() if l.strip()]
+    assert [(l[0], l[1]) for l in lines] == [("1", "3")]
 
 
 def test_cli_empty_query_errors(tmp_path):

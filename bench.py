@@ -266,6 +266,10 @@ def main() -> None:
         "profile_table",
         "basket_pair_lift",
         "streaming_checkpoint_resume",
+        "embedding_neardup_lsh",
+        "split_leakage_report",
+        "dedup_incremental_lsh",
+        "gapfill_linear",
     )
     if os.environ.get("SPARK_GRAFT_WARM_MEDIANS", "1") != "0":
         top = [n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:10]]

@@ -815,11 +815,15 @@ def search(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k over the **persisted** index (reference ``query.py``
-    lifecycle, SURVEY.md section 3.2): one job over the latest commit.
+    lifecycle, SURVEY.md section 3.2) over the latest commit, as one SQL
+    plan (:func:`operators.search.bm25_rank`): four Spark jobs -- the
+    vocab and doc_stats broadcasts, the partial-aggregate shuffle and the
+    result -- plus one broadcast each for tombstones and ``allowed``.
 
     The postings read is only the committed files of the query terms'
     buckets, picked driver-side; vocab, doc_stats and tombstones are the
-    commit's files, and N / avg_dl come from the commit itself.
+    commit's files, and N / avg_dl come from the commit itself, inlined
+    as exact DOUBLE literals.
 
     ``allowed`` (optional, a ``doc_id`` frame) restricts the CANDIDATES
     to a metadata facet via a broadcast semi join applied after bucket +
@@ -835,21 +839,17 @@ def search(
         "inverted_index",
         [p for p in snap.files["inverted_index"] if _bucket(p) in buckets],
     )
-    # tombstone mask over only the query's postings, broadcast against
-    # the (tiny) delete set; vocab and N/avg_dl were corrected at delete
-    # time, so masking the postings is the only search-side change
-    if snap.files["tombstones"]:
-        postings = postings.join(
-            F.broadcast(_read(spark, snap, "tombstones")), "doc_id", "left_anti"
-        )
-    if allowed is not None:
-        postings = postings.join(
-            F.broadcast(allowed.select("doc_id")), "doc_id", "left_semi"
-        )
-    stats = spark.range(1).select(
-        F.lit(snap.total_docs).cast("long").alias("n_docs"),
-        F.lit(snap.avg_dl).alias("avg_dl"),
-    )
-    return search_ops.bm25_rank_with_stats(
-        postings, _read(spark, snap, "vocab"), _read(spark, snap, "doc_stats"), stats, query, k
+    # the tombstone mask covers only the query's postings; vocab and
+    # N/avg_dl were corrected at delete time, so masking the postings is
+    # the only search-side change
+    tombstones = _read(spark, snap, "tombstones") if snap.files["tombstones"] else None
+    return search_ops.bm25_rank(
+        postings,
+        _read(spark, snap, "vocab"),
+        _read(spark, snap, "doc_stats"),
+        query,
+        k,
+        stats=(snap.total_docs, snap.avg_dl),
+        tombstones=tombstones,
+        allowed=allowed,
     )

@@ -1,4 +1,4 @@
-"""BM25 scoring as native Column arithmetic.
+"""BM25 scoring as SQL expression text.
 
 Exact semantics of the reference (``app/query.py:60,74-79``; SURVEY.md
 section 4 BM25 box):
@@ -8,8 +8,9 @@ section 4 BM25 box):
     score    = idf * tf_norm          (k1 = 1.2, b = 0.75)
 
 The reference computes this in a per-row Python lambda over an RDD
-(``query.py:65-83``); here it is a pure Column expression, so it stays
-inside whole-stage codegen -- no Python boundary in the hot path.
+(``query.py:65-83``); here it is one SQL expression inside the search
+plan, so it stays inside whole-stage codegen -- no Python boundary in the
+hot path.
 
 Guards the reference lacks: ``avg_dl == 0`` (empty corpus) would divide by
 zero in ``query.py:78``; we defend with a nullif -> coalesce to 0 score.
@@ -17,33 +18,28 @@ zero in ``query.py:78``; we defend with a nullif -> coalesce to 0 score.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 K1 = 1.2
 B = 0.75
 
 
-def idf(n_docs: Column, doc_freq: Column) -> Column:
-    """Natural-log BM25 idf; matches Python ``math.log`` (F5)."""
-    df = doc_freq.cast("double")
-    return F.log(F.lit(1.0) + (n_docs.cast("double") - df + 0.5) / (df + 0.5))
+def score_sql(tf: str, dl: str, avg_dl: str, n: str, df: str) -> str:
+    """Spark SQL text of one (term, doc) BM25 contribution; the arguments
+    are SQL expressions. Every operand is a DOUBLE -- a bare ``0.5`` is a
+    DECIMAL literal in Spark SQL, which would move the arithmetic off
+    IEEE doubles -- and the operations group as in the formula above."""
+    tf, dl, avg_dl, n, df = (f"CAST({e} AS DOUBLE)" for e in (tf, dl, avg_dl, n, df))
+    return (
+        f"ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D))"
+        f" * coalesce({tf} * {K1 + 1.0!r}D / ({tf} + {K1!r}D * ({1.0 - B!r}D"
+        f" + {B!r}D * {dl} / nullif({avg_dl}, 0.0D))), 0.0D)"
+    )
 
 
-def tf_norm(tf: Column, dl: Column, avg_dl: Column, k1: float = K1, b: float = B) -> Column:
-    tfd = tf.cast("double")
-    denom = tfd + k1 * (1.0 - b + b * dl.cast("double") / F.nullif(avg_dl.cast("double"), F.lit(0.0)))
-    return F.coalesce(tfd * (k1 + 1.0) / denom, F.lit(0.0))
-
-
-def score(tf: Column, dl: Column, avg_dl: Column, n_docs: Column, doc_freq: Column) -> Column:
-    return idf(n_docs, doc_freq) * tf_norm(tf, dl, avg_dl)
-
-
-# DuckDB twin of score(); {tf} {dl} {avg_dl} {n} {df} are SQL expressions.
-# The coalesce mirrors tf_norm's avg_dl==0 guard -- without it Spark
-# emits 0.0 scores on an empty-corpus stats row while the SQL twin
-# propagates NULL (divergent engines where the module claims one guard).
+# DuckDB twin of score_sql(), for the oracles only; {tf} {dl} {avg_dl} {n}
+# {df} are SQL expressions. The coalesce mirrors the avg_dl==0 guard --
+# without it Spark emits 0.0 scores on an empty-corpus stats row while the
+# SQL twin propagates NULL (divergent engines where the module claims one
+# guard).
 SQL_SCORE = (
     "ln(1.0 + ({n} - {df} + 0.5) / ({df} + 0.5))"
     " * coalesce({tf} * (1.2 + 1.0)"

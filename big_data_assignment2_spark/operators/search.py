@@ -1,16 +1,25 @@
 """BM25 search: the reference's query engine (``app/query.py``) as one
-declarative DataFrame expression tree.
+``spark.sql`` plan.
 
 Reference lifecycle (SURVEY.md section 3.2): scan 4 Cassandra tables with
 ``isin(query_terms)`` pushdown -> inner join doc_stats -> RDD lambda
 computes per-(term,doc) BM25 -> reduceByKey sum -> ``takeOrdered(10)``.
 
-Here the whole thing is one job: the postings/vocab IN-filters prune at
-the parquet scan, vocab + the 1-row corpus-stats frame join in as
-broadcasts, scoring is Column arithmetic inside whole-stage codegen, the
-per-doc sum is a two-phase hash aggregate, and the top-k plans as
-TakeOrderedAndProject (per-partition heaps -- no global sort). No Python
-executes per row anywhere.
+Here :func:`bm25_rank` states the whole query as one SQL text over the
+index frames (bound as kwargs): the postings/vocab IN-filters prune at the
+parquet scan, vocab joins in as a broadcast, scoring is SQL arithmetic
+inside whole-stage codegen, the per-doc sum is a two-phase hash aggregate,
+and the top-k plans as TakeOrderedAndProject (per-partition heaps -- no
+global sort) with ``row_number()`` directly on its single sorted
+partition. No Python executes per row anywhere.
+
+A warm search over a persisted commit runs four Spark jobs: the vocab
+broadcast, the doc_stats broadcast (doc_stats is under the auto-broadcast
+threshold; a larger one shuffle-joins instead), the map stage of the
+partial-aggregate shuffle, and the result job (final aggregate, top-k,
+rank). Tombstones add one broadcast job, a facet one more. The from-corpus
+path also broadcasts its one-row corpus-stats aggregate, where a commit
+inlines N and avg_dl as literals.
 
 Determinism beyond the reference: scores rounded to 6 decimals and ties
 broken by ``doc_id`` ascending (the reference's ``takeOrdered`` tie order
@@ -19,14 +28,14 @@ is partition-dependent -- SURVEY.md section 4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..functions.text import tokenize_query
 from ..registry import Registry
 from . import index_build
-from ._util import dsum, sql_dsum
+from ._util import sql_dsum
 
 DEFAULT_QUERY = "spark query window merge zzz"  # 'zzz' exercises the df=0 drop
 DEFAULT_K = 10
@@ -38,70 +47,73 @@ def bm25_rank(
     doc_stats: DataFrame,
     query: str = DEFAULT_QUERY,
     k: int = DEFAULT_K,
+    *,
+    stats: tuple[int, float] | None = None,
+    tombstones: DataFrame | None = None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """Rank documents for *query* against prebuilt index DataFrames.
+    """Rank documents for *query* against index DataFrames, as one
+    ``spark.sql`` text with the frames bound as kwargs.
+
+    ``stats`` is ``(N, avg_dl)`` when the caller knows them (a persisted
+    commit); they are inlined as exact DOUBLE literals. Without it they
+    come from the ``corpus_stats_agg`` aggregate over *doc_stats*,
+    cross-joined as one broadcast row. ``tombstones`` (anti) and
+    ``allowed`` (semi) are optional ``doc_id`` frames joined to the
+    postings as broadcasts after term pruning.
 
     Returns ``rank int, doc_id string, title string, score double`` --
     the reference's output line format (``app/query.py:95-96``).
     """
-    stats = index_build.corpus_stats_agg(doc_stats, n_alias="n_docs")
-    return bm25_rank_with_stats(inverted, vocab, doc_stats, stats, query, k)
-
-
-def bm25_rank_with_stats(
-    inverted: DataFrame,
-    vocab: DataFrame,
-    doc_stats: DataFrame,
-    stats: DataFrame,
-    query: str = DEFAULT_QUERY,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """As :func:`bm25_rank` but with the 1-row ``(n_docs, avg_dl)`` stats
-    frame supplied (e.g. parsed from a persisted ``meta`` table -- the
-    reference's ``query.py:32-38`` path)."""
     terms = tokenize_query(query)
-    postings = inverted.where(F.col("term").isin(terms))
-    vocab_q = vocab.where(F.col("term").isin(terms))
-    scored = (
-        postings.join(F.broadcast(vocab_q), "term")
-        .join(doc_stats.select("doc_id", "length"), "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            bm25.score(
-                F.col("tf"),
-                F.col("length"),
-                F.col("avg_dl"),
-                F.col("n_docs"),
-                F.col("doc_freq"),
-            ).alias("partial"),
-        )
-    )
-    # The per-doc sum aggregates ONLY (doc_id, double): a string in the
-    # aggregation buffer (the old max(title)) is not UnsafeRow-mutable and
-    # silently demoted the whole corpus-sized aggregate to SortAggregate
-    # (sort per partition); numeric-only buffers keep it a two-phase
-    # HashAggregate. Titles attach AFTER the top-k, a k-row broadcast
-    # join -- which also matches the reference more closely than the old
-    # max(title) (titles are functionally dependent on doc_id).
-    # dsum(9): per-term contributions accumulate as exact DECIMAL(18,9)
-    # -- a plain double sum is partition-order-dependent, and a doc whose
-    # unrounded score sits within an ulp of a 0.5e-6 rounding boundary
-    # could round differently across engines/runs; the 1e-9 quantization
-    # is absorbed by the final round-to-6 (repo-wide dsum convention)
-    ranked = (
-        scored.groupBy("doc_id")
-        .agg(F.round(dsum(F.col("partial"), 9), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    titled = F.broadcast(ranked).join(
-        doc_stats.select("doc_id", "title"), "doc_id"
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return titled.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "doc_id", "title", "score"
-    )
+    # a zero-term query would be "IN ()", a syntax error; the tokenizer
+    # never produces '', so this matches no posting
+    in_list = ", ".join(f"'{t}'" for t in terms) or "''"
+    frames = {"inverted": inverted, "vocab": vocab, "doc_stats": doc_stats}
+    joins = ""
+    for name, frame, join in (("tombstones", tombstones, "ANTI"), ("allowed", allowed, "SEMI")):
+        if frame is not None:
+            frames[name] = frame
+            joins += f"""
+  LEFT {join} JOIN (SELECT /*+ BROADCAST */ doc_id FROM {{{name}}}) {name}
+    ON i.doc_id = {name}.doc_id"""
+    if stats is None:
+        frames["stats"] = index_build.corpus_stats_agg(doc_stats, n_alias="n_docs")
+        n_docs, avg_dl = "st.n_docs", "st.avg_dl"
+        stats_join = "CROSS JOIN (SELECT /*+ BROADCAST */ n_docs, avg_dl FROM {stats}) st"
+    else:
+        # repr() round-trips a float exactly; a decimal literal would not
+        n_docs, avg_dl = (f"CAST('{float(x)!r}' AS DOUBLE)" for x in stats)
+        stats_join = ""
+    score = bm25.score_sql("i.tf", "s.length", avg_dl, n_docs, "v.doc_freq")
+    # The title rides the aggregate key (it depends on doc_id alone), so
+    # no join follows the top-k and row_number() runs on
+    # TakeOrderedAndProject's single sorted partition with no exchange.
+    # As a key the string keeps the aggregate a hash aggregate; in the
+    # aggregation buffer (max(title)) it would demote it to a sort
+    # aggregate. dsum(9): per-term contributions accumulate as exact
+    # DECIMAL(18,9) -- a plain double sum is partition-order-dependent, and
+    # a score within an ulp of a 0.5e-6 rounding boundary could round
+    # differently across engines/runs; the final round-to-6 absorbs the
+    # 1e-9 quantization (repo-wide dsum convention).
+    text = f"""
+WITH top AS (
+  SELECT i.doc_id, s.title, round({sql_dsum(score, 9)}, 6) AS score
+  FROM {{inverted}} i{joins}
+  JOIN (SELECT /*+ BROADCAST */ term, doc_freq FROM {{vocab}} WHERE term IN ({in_list})) v
+    ON i.term = v.term
+  JOIN {{doc_stats}} s ON i.doc_id = s.doc_id
+  {stats_join}
+  WHERE i.term IN ({in_list})
+  GROUP BY i.doc_id, s.title
+  ORDER BY score DESC, i.doc_id ASC
+  LIMIT {int(k)}
+)
+SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
+       doc_id, title, score
+FROM top
+"""
+    return inverted.sparkSession.sql(text, **frames)
 
 
 def bm25_search(
@@ -279,15 +291,13 @@ def bm25_search_filtered(
         .where(F.col("lang") == FILTER_LANG)
         .select(F.col("doc_id").cast("string").alias("doc_id"))
     )
-    inverted = index_build.inverted_index(spark, sf_dir).join(
-        F.broadcast(allowed), "doc_id", "left_semi"
-    )
     return bm25_rank(
-        inverted,
+        index_build.inverted_index(spark, sf_dir),
         index_build.vocab(spark, sf_dir),
         index_build.doc_stats(spark, sf_dir),
         query,
         k,
+        allowed=allowed,
     )
 
 

@@ -27,9 +27,7 @@ from ..operators.index_build import (
     vocab_from_inverted,
 )
 from ..operators.search import bm25_rank, sql_bm25
-from ..registry import Registry
-
-REFERENCE_DATA_DIR = "/root/reference/app/data"
+from ..registry import REFERENCE_DATA_DIR, Registry
 
 # The three demo queries app.sh runs (app/app.sh:22-27).
 SMOKE_QUERIES = {

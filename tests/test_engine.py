@@ -134,6 +134,47 @@ def test_persisted_matches_oracle(spark, sf_dir, index_dir):
     assert diff is None, diff
 
 
+def test_search_avg_dl_literal_is_exact(spark, tmp_path):
+    """N and avg_dl reach the plan as literals: an avg_dl with no short
+    decimal form (a repeating third) must score exactly as the oracle's
+    double division does, for every document, not just a top-10."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    rng = random.Random(3)
+    words = ["data", "model", "query", "spark", "index", "merge", "window"]
+    texts = [" ".join(rng.choices(words, k=rng.randint(1, 12))) for _ in range(59)]
+    total = sum(len(t.split()) for t in texts)
+    # N = 60: a total length not divisible by 3 makes avg_dl repeat
+    texts.append(" ".join(["data"] * (1 if (total + 1) % 3 else 2)))
+    docs = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    d = str(tmp_path / "idx")
+    engine.build_index(
+        spark.createDataFrame(
+            [(str(i), f"doc_{i}", t) for i, t in enumerate(texts)],
+            "doc_id string, title string, text string",
+        ),
+        d,
+        n_buckets=4,
+    )
+    avg_dl = engine.snapshot(spark, d).avg_dl
+    assert len(repr(avg_dl)) > 15 and float(f"{avg_dl:.6f}") != avg_dl
+    con = duckdb.connect()
+    con.register("documents", docs)
+    try:
+        q = "data model query spark"
+        diff = compare(
+            engine.search(spark, d, q, k=len(texts)),
+            con,
+            search_ops.sql_bm25(q, k=len(texts)),
+        )
+    finally:
+        con.close()
+    assert diff is None, diff
+
+
 def test_python_bucket_matches_spark(spark):
     terms = ["data", "model", "zebra", "q7", "1", ""]
     df = spark.createDataFrame([(t,) for t in terms], "term string")

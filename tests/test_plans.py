@@ -125,6 +125,35 @@ def test_persisted_search_prunes_buckets(spark, sf_dir, tmp_path):
     assert {os.path.relpath(urlparse(f).path, d) for f in df.inputFiles()} == want
 
 
+def test_persisted_search_job_budget(spark, sf_dir, tmp_path):
+    """A warm persisted search runs the vocab and doc_stats broadcasts,
+    the partial-aggregate shuffle and the result job: nothing for the
+    corpus stats (inlined literals), the titles (aggregate key) or the
+    rank (row_number on the top-k's single partition). Tombstones add
+    their broadcast."""
+    from big_data_assignment2_spark import engine
+    from big_data_assignment2_spark.operators import index_build
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(d, group):
+        engine.search(spark, d, "data model query").collect()  # warm
+        sc.setJobGroup(group, group)
+        try:
+            engine.search(spark, d, "data model query").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    d = str(tmp_path / "idx")
+    docs = index_build.documents_with_title(spark, sf_dir)
+    engine.build_index(docs, d, n_buckets=8)
+    assert jobs(d, "search-budget-steady") <= 4
+    engine.delete_from_index(docs.limit(3).select("doc_id"), d)
+    assert jobs(d, "search-budget-tombstones") <= 5
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -140,8 +169,10 @@ def test_persisted_search_prunes_buckets(spark, sf_dir, tmp_path):
     ],
 )
 def test_no_cartesian_anywhere(spark, sf_dir, name):
-    # BroadcastNestedLoopJoin appears only for deliberate 1-row
-    # stats crossJoins (bm25); a true CartesianProduct is always a bug.
+    # BroadcastNestedLoopJoin appears only for deliberate 1-row build
+    # sides (the from-corpus bm25 path's corpus-stats aggregate; the
+    # persisted search inlines N/avg_dl instead); a true CartesianProduct
+    # is always a bug.
     assert not audit(_df(spark, sf_dir, name), forbids=("CartesianProduct",))
 
 

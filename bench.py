@@ -234,11 +234,12 @@ def main() -> None:
     # headline totals above stay untouched.
     warm_medians: dict[str, dict] = {}
     suspects_dropped: list[str] = []
-    # Always-warm rows (additions-only diagnostics, r13): the fan-out
-    # keeper queries plus the streaming resume demo -- exactly the rows
-    # whose cold-position noise caused the r12 regression-attribution
-    # pain. A warm-median row for each makes any future "regressed"
-    # reading refutable (or confirmable) from the artifact itself.
+    # Always-warm rows (additions-only diagnostics, r13): the queries
+    # whose small-input fan-out was A/B-tested in r12/r13, plus the
+    # streaming resume demo -- exactly the rows whose cold-position noise
+    # caused the r12 regression-attribution pain. A warm-median row for
+    # each makes any future "regressed" reading refutable (or
+    # confirmable) from the artifact itself.
     # Headline totals are untouched: warm reps land in warm_medians only.
     _ALWAYS_WARM = (
         "simhash",

@@ -4,13 +4,12 @@ A parquet scan's parallelism floor is the ROW GROUP: Spark assigns file
 splits by byte ranges, but a row group is consumed by exactly one task,
 so a single-row-group file plans as ONE task no matter how many cores
 the session has. The bench corpus is single-row-group files (0.6-11 MB),
-which serializes every CPU-heavy narrow chain that follows the scan --
-tokenize+explode, per-token hash extraction, higher-order-function
-arithmetic, image decode -- on one core while the other N-1 idle.
+which serializes every CPU-heavy narrow chain that follows the scan on
+one core while the other N-1 idle.
 
 The optimization-guide fix (section 2.5, "input skew: one huge
 unsplittable file ... repartition immediately after the read") applied
-scale-adaptively:
+scale-adaptively, decided from the input size alone:
 
 * When the input's NATURAL split count (ceil(bytes / maxPartitionBytes))
   already reaches the session's default parallelism -- i.e. any
@@ -22,9 +21,11 @@ scale-adaptively:
   CPU-bound stage that follows.
 
 Apply it AFTER projecting to the columns the heavy stage needs (guide
-section 2.3: project before the exchange), and only in front of work
-that is CPU-heavy per row -- a plain columnar aggregate does not earn
-the extra Exchange.
+section 2.3: project before the exchange), and only where a
+fresh-process A/B shows the win: most per-row text and embedding chains
+measured neutral or slower with the extra exchange, and only the heaviest
+map sides keep it (the 6-way profile Expand, the D^2/2 embedding
+explode, the per-character entropy sort, the span-gram construction).
 
 Correctness: round-robin repartitioning only changes row placement.
 Every consumer in this package is already row-order-independent (decimal
@@ -40,24 +41,6 @@ import os
 import re
 
 from pyspark.sql import DataFrame
-
-_SIZE_RE = re.compile(r"^(\d+)([kmgt]?)b?$", re.IGNORECASE)
-_MULT = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-# Env kill-switch so plan-shape tests can assert the untouched (at-scale)
-# plan, and A/B probes can isolate the fan-out's effect.
-_DISABLE_ENV = "SPARK_GRAFT_NO_FANOUT"
-
-
-def _conf_bytes(spark, key: str, default: int) -> int:
-    try:
-        raw = str(spark.conf.get(key))
-    except Exception:  # noqa: BLE001 - unreadable conf -> default
-        return default
-    m = _SIZE_RE.match(raw.strip())
-    if not m:
-        return default
-    return int(m.group(1)) * _MULT[m.group(2).lower()]
 
 
 def input_bytes(*paths: str) -> int | None:
@@ -88,14 +71,14 @@ def fan_out(df: DataFrame, nbytes: int | None) -> DataFrame:
     """Round-robin repartition *df* to the session's default parallelism
     IFF its source input (*nbytes* on disk) is too small to split
     naturally across the cores; identity otherwise (any at-scale input,
-    unknown sizes, or the ``SPARK_GRAFT_NO_FANOUT`` env kill-switch)."""
-    if nbytes is None or os.environ.get(_DISABLE_ENV):
+    or an unknown size)."""
+    if nbytes is None:
         return df
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     if cores <= 1:
         return df
-    max_split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     natural_splits = max(1, -(-nbytes // max_split))
     if natural_splits >= cores:
         return df

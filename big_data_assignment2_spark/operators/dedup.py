@@ -119,20 +119,15 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity, so identical-looking plans do NOT match across calls -- the
     r4 bench measured the fast path silently re-running the whole pandas
     shingle pass because of exactly that."""
-    # NOT fanned out, and the memo key records that decision: the
-    # shingle pass is paid once into this cached frame, so what the
-    # downstream consumers actually re-read is the CACHE -- and a
-    # 32-partition cache makes every post-cache stage (band joins,
-    # anti-join, pair aggregation) pay 32x task overhead on a tiny
-    # frame. A memo-keyed A/B (the kill-switch must not be served the
-    # other arm's cached plan) measured the fan-out as a 1.43-1.77x
-    # LOSS across all four consumers, and the fresh-process build-side
+    # NOT fanned out: the shingle pass is paid once into this cached
+    # frame, so what the downstream consumers actually re-read is the
+    # CACHE -- and a 32-partition cache makes every post-cache stage
+    # (band joins, anti-join, pair aggregation) pay 32x task overhead on
+    # a tiny frame. An A/B measured the fan-out as a 1.43-1.77x LOSS
+    # across all four consumers, and the fresh-process build-side
     # comparison is neutral (9.4 vs 8.6s) -- so the single-task shingle
     # pass stays.
-    import os as _os
-
-    key = (sf_dir, bool(_os.environ.get("SPARK_GRAFT_NO_FANOUT")))
-    hit = _SHINGLES.get(key)
+    hit = _SHINGLES.get(sf_dir)
     if hit is not None and hit[0] is spark:
         return hit[1]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -154,12 +149,12 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.count()  # materialize the filtered cache off the raw cache
     finally:
         sh.unpersist()  # drop the raw rows even if materialization fails
-    _SHINGLES[key] = (spark, out)
+    _SHINGLES[sf_dir] = (spark, out)
     return out
 
 
 # (session, filtered-shingle frame) per sf_dir -- see _doc_shingles
-_SHINGLES: dict[tuple[str, bool], tuple[SparkSession, DataFrame]] = {}
+_SHINGLES: dict[str, tuple[SparkSession, DataFrame]] = {}
 
 
 SQL_DOC_SHINGLES = f"""
@@ -374,14 +369,10 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction happens once per token row in a projection; votes are
     rebuilt as ``2*s_j - total`` (see ``simhash_contrib_cols``).
 
-    The scan fans out first (guide section 2.5): the 64 per-token md5
-    bit extractions are the heaviest projection in the dedup family and
-    a single-row-group corpus would pin them to one task."""
-    docs = fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    )
+    Not fanned out: a fresh-process A/B read 1.30x (simhash) and 1.11x
+    (simhash_neardup_pairs) with the round-robin exchange in front of
+    the md5 bit extraction."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     contrib = tokenize(docs).select(
         "doc_id", *simhash_contrib_cols("term", "1")
     )

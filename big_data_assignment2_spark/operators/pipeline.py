@@ -31,7 +31,6 @@ from ..functions.hashing import ngrams_pd, shingles_pd, sql_ngrams, sql_shingles
 from ..functions.text import SQL_TOKENS, tokens
 from ..registry import Registry
 from ..sources.catalog import load_table
-from ._rebalance import fan_out_table
 from .textstats import _sql_text_quality, text_quality
 
 # quality_filter_apply policy (chosen to keep a non-trivial subset of the
@@ -132,14 +131,10 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap), emitted one row per chunk with its re-joined text. The 1->N
     expansion is ``explode(sequence(..))`` + ``slice`` in a single
     projection -- narrow, no Python, no shuffle; the chunk count per doc
-    is ``floor((n_tokens-1)/stride)+1``. (The conditional fan-out below
-    only fires on inputs too small to split naturally; at production
-    size the plan stays narrow and shuffle-free.)"""
-    docs = fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    ).select("doc_id", tokens("text").alias("toks"))
+    is ``floor((n_tokens-1)/stride)+1``."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("toks")
+    )
     n = F.size("toks")
     chunked = docs.where(n > 0).select(
         "doc_id",
@@ -358,11 +353,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, bigram) -- a near-unique composite key, no skew -- then
     reduce to one row per doc. Docs with < 2 tokens have no bigrams and
     drop out in both engines."""
-    docs = fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bg = docs.select("doc_id", F.explode(ngrams_pd("text", 2)).alias("bg"))
     counts = bg.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -530,11 +521,7 @@ def blocklist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy lists; for blocklists too large to inline, the scaled
     sibling is ``decontaminate`` (broadcast join against the exploded
     term set)."""
-    docs = fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hits = F.size(
         F.filter(tokens("text"), lambda t: t.isin(*BLOCKLIST))
     )

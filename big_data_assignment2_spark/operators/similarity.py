@@ -142,9 +142,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k against the query vector (vec_id=0)."""
-    emb = fan_out_table(
-        load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(_query_vec(spark, sf_dir)))
@@ -202,9 +200,9 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ann_topk_persisted`, where the cell is a parquet partition
     column and the probe set is a driver-side literal filter (directory
     pruning, like the BM25 term buckets in ``engine.py``)."""
-    emb = fan_out_table(
-        load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    ).withColumn("bucket", _bucket_col("embedding"))
+    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+        "bucket", _bucket_col("embedding")
+    )
     q = (
         emb.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket"))
@@ -370,7 +368,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folds inside _cell_dots are interpreted, so a duplicated expression
     # really does evaluate twice), then derive cells from the column
     emb = (
-        fan_out_table(load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .withColumn("d", _cell_dots("embedding"))
         .withColumn("cell", F.array_position(F.col("d"), F.array_max("d")))
     )
@@ -1074,9 +1072,7 @@ def kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed bit-identical doubles into iteration 2."""
     from pyspark.sql import Window
 
-    emb = fan_out_table(
-        load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.posexplode("embedding").alias("dim", "fval")).select(
         "vec_id", "dim", F.col("fval").cast("double").alias("val")
     )

@@ -46,12 +46,8 @@ def _sql_count_in(toks: str, words: tuple[str, ...]) -> str:
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality features: token count, punctuation ratio, stopword
-    ratio, average word length, and a bounded composite score.
-
-    Fans the scan out first (guide section 2.5): five regex/HOF passes
-    per row with per-doc output -- per-row-heavy, aggregation-light, the
-    shape where the conditional fan-out measured as a clear win."""
-    docs = fan_out_table(documents_with_title(spark, sf_dir), sf_dir, "documents")
+    ratio, average word length, and a bounded composite score."""
+    docs = documents_with_title(spark, sf_dir)
     toks = tokens("text")
     n_tokens = F.size(toks).cast("long")
     n_chars = F.length("text").cast("long")
@@ -108,11 +104,8 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (A real pipeline would plug a model in via pandas_udf; the operator
     shape -- per-doc argmax over per-language scores -- is the same.)
-
-    Fanned out (guide section 2.5): four marker-set membership scans per
-    row, per-doc output -- measured 0.32x with the fan-out.
     """
-    docs = fan_out_table(documents_with_title(spark, sf_dir), sf_dir, "documents")
+    docs = documents_with_title(spark, sf_dir)
     toks = tokens("text")
     scores = {lang: _count_in(toks, m) for lang, m in LANG_MARKERS.items()}
     en, de, fr, es = scores["en"], scores["de"], scores["fr"], scores["es"]
@@ -156,10 +149,8 @@ BPE_ISH_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three tokenizer views per doc: raw whitespace split, alnum-run
-    tokens (the index tokenizer), and a BPE-ish regex segmentation.
-    Fanned out (guide section 2.5): three tokenizer passes per row,
-    per-doc output, no aggregation to amortize the single-task scan."""
-    docs = fan_out_table(documents_with_title(spark, sf_dir), sf_dir, "documents")
+    tokens (the index tokenizer), and a BPE-ish regex segmentation."""
+    docs = documents_with_title(spark, sf_dir)
     ws = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit("")))
     alnum = F.size(tokens("text"))
     bpe = F.size(F.regexp_extract_all(F.lower("text"), F.lit(BPE_ISH_RE), 0))
@@ -186,12 +177,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style fingerprint: the minimum md5 over the doc's
     distinct 8-token shingles (short docs hash all their tokens).
     Equal fingerprints => near-identical prefixes of content; used as a
-    cheap first-pass near-dup key at scale.
-
-    Fanned out (guide sections 2.5 + 4): the pandas-UDF shingle+md5 pass
-    otherwise runs through ONE Python worker on a single-row-group
-    corpus."""
-    docs = fan_out_table(documents_with_title(spark, sf_dir), sf_dir, "documents")
+    cheap first-pass near-dup key at scale."""
+    docs = documents_with_title(spark, sf_dir)
     fp = fingerprint_pd("text", FP_K)
     return docs.select("doc_id", fp.alias("fp")).select(
         "doc_id",
@@ -599,14 +586,10 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     total character delta. Pure Column regex work (regexp_extract_all /
     regexp_replace are JVM-side, whole-stage codegen) -- the per-row
     scrub is embarrassingly parallel at 100 TB and the report is one
-    map-side-combinable aggregate. Fans the scan out first (guide
-    section 2.5) so the regex scrub is not pinned to one task on a
-    single-row-group corpus."""
-    docs = fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"),
-        sf_dir,
-        "documents",
-    ).select("source", _planted(F.col("doc_id"), F.col("text")).alias("t"))
+    map-side-combinable aggregate."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", _planted(F.col("doc_id"), F.col("text")).alias("t")
+    )
     scrubbed = F.regexp_replace(
         F.regexp_replace(F.col("t"), PII_EMAIL_RE, "<EMAIL>"),
         PII_PHONE_RE,

@@ -30,7 +30,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..registry import Registry
 from ..sources.catalog import load_table
-from ._rebalance import fan_out_table
+from ._rebalance import input_bytes
 
 
 def _median_udafs():
@@ -105,13 +105,8 @@ def bigrams_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bigrams = udtf(_BigramsUDTF, returnType="doc_id string, pos bigint, bigram string")
     spark.udtf.register("doc_bigrams", bigrams)
-    # fan out before the per-row UDTF (guide sections 2.5 + 4): eval()
-    # is row-at-a-time Python, the costliest boundary -- parallelize it
-    fan_out_table(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    ).createOrReplaceTempView("docs_v")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs.createOrReplaceTempView("docs_v")
     return spark.sql(
         """
         SELECT b.doc_id, b.pos, b.bigram
@@ -212,8 +207,6 @@ def cogroup_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer day numbers -- no float path and no bucket-count dependence,
     so the DuckDB twin (two aggregated sides full-outer-merged) matches
     exactly."""
-    from ._rebalance import input_bytes
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.floor(F.unix_timestamp("ts") / COGROUP_DAY_S).cast("long").alias("day"),

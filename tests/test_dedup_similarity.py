@@ -349,6 +349,39 @@ def test_star_components_long_chain_logarithmic(spark):
     assert rounds <= math.ceil(math.log2(n)) + 4, rounds
 
 
+def test_neardup_components_falls_back_to_star_on_long_chain(spark, tmp_path, monkeypatch):
+    """A pair graph deeper than ``MAX_CC_ITERS``: min-label propagation on
+    a 30-node ordered chain needs 29 rounds, so ``_components_labels``
+    must hand the graph to ``_star_components`` and still report ONE
+    component rooted at the minimum doc through ``neardup_components``."""
+    from big_data_assignment2_spark.operators import dedup
+
+    n = 30
+    assert n - 1 > dedup.MAX_CC_ITERS
+    spark.createDataFrame(
+        [(i, f"doc {i}", "en", "chain", 5) for i in range(n)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(dedup, "minhash_lsh_pairs", lambda spark, sf_dir: chain)
+    star_calls = []
+    real_star = dedup._star_components
+
+    def _spy(*args):
+        star_calls.append(1)
+        return real_star(*args)
+
+    monkeypatch.setattr(dedup, "_star_components", _spy)
+    got = {
+        r["doc_id"]: r["component_id"]
+        for r in dedup.neardup_components(spark, str(tmp_path)).collect()
+    }
+    assert star_calls == [1]
+    assert got == {i: 0 for i in range(n)}
+
+
 def test_star_components_matches_minlabel_on_corpus(spark, sf_dir):
     """On the real LSH pair graph the scale path and the diameter-bound
     fast path must produce identical (doc_id, component) labelings --

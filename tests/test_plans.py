@@ -6,19 +6,22 @@ from __future__ import annotations
 
 import pytest
 
+from big_data_assignment2_spark.operators import _rebalance
 from big_data_assignment2_spark.plans.audit import audit, explain_formatted, operators, pushed_filters
 from big_data_assignment2_spark.registry import build_registry
 
 REG = build_registry()
+_FAN_OUT = _rebalance.fan_out
 
 
 @pytest.fixture(autouse=True)
 def _no_fanout(monkeypatch):
     """Plan audits assert the AT-SCALE shape: the conditional small-input
-    fan-out (operators/_rebalance.py) is a no-op on any production-sized
-    table, so it is disabled here and covered by its own focused tests
-    (test_rebalance below / tests/test_semantics_wave6.py)."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_FANOUT", "1")
+    fan-out (``_rebalance.fan_out``) is a no-op on any production-sized
+    table, so it is an identity here (``fan_out_table`` looks it up at
+    call time) and the real rule is covered by
+    test_rebalance_fan_out_conditions below."""
+    monkeypatch.setattr(_rebalance, "fan_out", lambda df, nbytes: df)
 
 
 def _df(spark, sf_dir, name):
@@ -27,11 +30,10 @@ def _df(spark, sf_dir, name):
 
 def test_rebalance_fan_out_conditions(spark, sf_dir, monkeypatch):
     """fan_out adds its round-robin Exchange ONLY for inputs too small to
-    split naturally; big inputs and the kill-switch leave the plan
+    split naturally; big and unknown-size inputs leave the plan
     untouched."""
-    from big_data_assignment2_spark.operators._rebalance import fan_out, fan_out_table
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_FANOUT", raising=False)
+    monkeypatch.setattr(_rebalance, "fan_out", _FAN_OUT)
+    fan_out, fan_out_table = _rebalance.fan_out, _rebalance.fan_out_table
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cores = spark.sparkContext.defaultParallelism
     small = fan_out(df, 1024)
@@ -45,10 +47,6 @@ def test_rebalance_fan_out_conditions(spark, sf_dir, monkeypatch):
     assert big is df
     # unknown size -> identity (conservative)
     assert fan_out(df, None) is df
-    # kill-switch -> identity even for tiny inputs
-    monkeypatch.setenv("SPARK_GRAFT_NO_FANOUT", "1")
-    assert fan_out(df, 1024) is df
-    monkeypatch.delenv("SPARK_GRAFT_NO_FANOUT")
     # table form sizes from the file on disk (tiny at test sf -> fans out)
     fanned = fan_out_table(df, sf_dir, "documents")
     assert fanned.rdd.getNumPartitions() == cores or cores <= 1

@@ -1,28 +1,37 @@
-"""Fresh-process interleaved A/B of the fan-out: each rep spawns a NEW
-python/JVM process that warms up and times ONE noop-forced run of the
-query, so the measurement matches the driver bench's cold-position
-behavior (r12's same-session warm A/Bs disagreed with the driver's cold
-run on four keepers -- this tool settles those on the driver's terms).
-Arms alternate process by process (off, on, off, on, ...) so host-load
-drift hits both arms equally.
+"""Fresh-process interleaved A/B of two checkouts: each rep spawns a NEW
+python/JVM process per arm, whose child imports that checkout's package,
+so the measurement matches a cold driver run. Arms alternate process by
+process (A B, B A, A B, ...) so host-load drift hits both arms equally.
+With one checkout it is a repeat probe of that checkout.
 
-    python tools/cold_ab.py <reps-per-arm> <query> [<query> ...]
+    python tools/cold_ab.py <reps> <checkout_a> [<checkout_b>] <query> [<query> ...]
+    python tools/cold_ab.py <reps> <checkout_a> [<checkout_b>] --cli "<terms>"
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+Registry queries are timed in-process after session start and warm-up:
+``define`` is the query function call, ``exec`` one noop-forced run, and
+``total`` their sum. ``--cli`` instead times one whole
+``python -m big_data_assignment2_spark.search <terms>`` process (its
+argv split shell-style, so CLI flags such as ``--index-dir`` may lead),
+from spawn to printed top-10. Any ``COLD_AB_<phase>=<seconds>`` line a
+child prints to stdout is reported as a phase median, so an instrumented
+checkout can split its own time.
+
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
+SPARK_GRAFT_DRIVER_MEM.
 """
 
 from __future__ import annotations
 
 import os
+import shlex
 import statistics
 import subprocess
 import sys
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import time
 
 _CHILD = r"""
 import os, sys, time
-sys.path.insert(0, {here!r})
+sys.path.insert(0, {checkout!r})
 from big_data_assignment2_spark.registry import build_registry
 from big_data_assignment2_spark.session import get_spark
 import bench
@@ -34,51 +43,72 @@ sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 bench.warm_up(spark, sf_dir)
 fn = reg.queries[{name!r}].fn
 t0 = time.perf_counter()
-fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-print("COLD_AB_SECONDS=%.3f" % (time.perf_counter() - t0), flush=True)
+df = fn(spark, sf_dir)
+t1 = time.perf_counter()
+df.write.format("noop").mode("overwrite").save()
+t2 = time.perf_counter()
+print("COLD_AB_define=%.3f" % (t1 - t0), flush=True)
+print("COLD_AB_exec=%.3f" % (t2 - t1), flush=True)
+print("COLD_AB_total=%.3f" % (t2 - t0), flush=True)
 spark.stop()
 """
 
 
-def _run_child(name: str, arm: str) -> float:
-    env = dict(os.environ)
-    if arm == "off":
-        env["SPARK_GRAFT_NO_FANOUT"] = "1"
+def _run_child(checkout: str, target: str, cli: bool) -> dict[str, float]:
+    """One fresh process in *checkout*; returns its phase timings."""
+    env = dict(os.environ, PYTHONPATH=checkout)
+    if cli:
+        cmd = [sys.executable, "-m", "big_data_assignment2_spark.search", *shlex.split(target)]
     else:
-        env.pop("SPARK_GRAFT_NO_FANOUT", None)
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD.format(here=HERE, name=name)],
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=600,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("COLD_AB_SECONDS="):
-            return float(line.split("=", 1)[1])
-    raise RuntimeError(
-        f"child failed for {name}/{arm}: rc={out.returncode}\n"
-        f"{out.stdout[-1000:]}\n{out.stderr[-1000:]}"
-    )
+        cmd = [sys.executable, "-c", _CHILD.format(checkout=checkout, name=target)]
+    t0 = time.perf_counter()
+    out = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, env=env, timeout=600)
+    wall = time.perf_counter() - t0
+    phases = {
+        key[len("COLD_AB_") :]: float(val)
+        for key, _, val in (
+            line.partition("=") for line in out.stdout.splitlines() if line.startswith("COLD_AB_")
+        )
+    }
+    if out.returncode or not (cli or "total" in phases):
+        raise RuntimeError(
+            f"child failed for {target!r} in {checkout}: rc={out.returncode}\n"
+            f"{out.stdout[-1000:]}\n{out.stderr[-1000:]}"
+        )
+    if cli:
+        phases["total"] = wall
+    return phases
 
 
 def main() -> None:
     reps = int(sys.argv[1])
-    names = sys.argv[2:]
-    for name in names:
-        arms: dict[str, list[float]] = {"off": [], "on": []}
+    rest = sys.argv[2:]
+    checkouts = [os.path.abspath(rest.pop(0))]
+    if rest and os.path.isdir(rest[0]):
+        checkouts.append(os.path.abspath(rest.pop(0)))
+    cli = rest[:1] == ["--cli"]
+    for target in [" ".join(rest[1:])] if cli else rest:
+        runs: list[list[dict[str, float]]] = [[] for _ in checkouts]
         for i in range(reps):
             # alternate which arm goes first each rep
-            order = ("off", "on") if i % 2 == 0 else ("on", "off")
-            for arm in order:
-                arms[arm].append(_run_child(name, arm))
-        m_off = statistics.median(arms["off"])
-        m_on = statistics.median(arms["on"])
-        print(
-            f"{name}: OFF median={m_off:.3f} {arms['off']} | "
-            f"ON median={m_on:.3f} {arms['on']} | on/off={m_on / m_off:.2f}",
-            flush=True,
-        )
+            for arm in range(len(checkouts)) if i % 2 == 0 else reversed(range(len(checkouts))):
+                runs[arm].append(_run_child(checkouts[arm], target, cli))
+        totals = [[r["total"] for r in arm] for arm in runs]
+        for label, c, arm, tot in zip("AB", checkouts, runs, totals):
+            phases = " ".join(
+                f"{k}={statistics.median(r[k] for r in arm):.3f}"
+                for k in arm[0]
+                if k != "total"
+            )
+            print(
+                f"{target} [{label}] {c}: median={statistics.median(tot):.3f} "
+                f"{[round(t, 3) for t in tot]} {phases}".rstrip(),
+                flush=True,
+            )
+        if len(runs) == 2:
+            wins = sum(b < a for a, b in zip(*totals))
+            ratio = statistics.median(totals[1]) / statistics.median(totals[0])
+            print(f"{target}: B/A={ratio:.2f} (B faster in {wins}/{reps} pairs)", flush=True)
 
 
 if __name__ == "__main__":

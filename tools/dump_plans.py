@@ -1,7 +1,15 @@
-"""Regenerate PLANS.md: formatted physical plans of the flagship queries
-with a one-line 'what to look at' note each. Run from the repo root:
+"""Formatted physical plans. With no arguments, regenerate PLANS.md: the
+flagship queries with a one-line 'what to look at' note each (default sf
+dir sf0.01). Run from the repo root:
 
     python tools/dump_plans.py > PLANS.md
+
+With arguments, write ``<out_dir>/<query>_<suffix>.txt`` for each named
+query (default sf dir sf0.1), e.g. ``plans/r13 before ...``. Queries that
+depend on persisted fixtures trigger their builds first, exactly as the
+bench does, so the plan reflects the benched read path:
+
+    python tools/dump_plans.py <out_dir> <suffix> <query> [<query> ...]
 """
 
 from __future__ import annotations
@@ -11,7 +19,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # (query name, what the plan proves)
 PICKS = [
@@ -54,20 +61,34 @@ def main() -> None:
     from big_data_assignment2_spark.registry import build_registry
     from big_data_assignment2_spark.session import get_spark
 
+    args = sys.argv[1:]
+    sf = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1" if args else "/root/testdata/sf0.01"
+    )
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     reg = build_registry()
-    print("# PLANS — formatted physical plans of the flagship queries")
-    print()
-    print(f"Generated by `python tools/dump_plans.py` at sf dir `{SF}`.")
-    print("Regenerate after changing any of these operators; the shapes")
-    print("below are also asserted in `tests/test_plans.py`.")
-    for name, note in PICKS:
-        df = reg.queries[name].fn(spark, SF)
-        print(f"\n## {name}\n\n*What to look at:* {note}\n")
-        print("```")
-        print(explain_formatted(df).rstrip())
-        print("```")
+    if args:
+        out_dir, suffix, *names = args
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names:
+            text = explain_formatted(reg.queries[name].fn(spark, sf))
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(text)
+            print(f"wrote {path} ({len(text)} bytes)")
+    else:
+        print("# PLANS — formatted physical plans of the flagship queries")
+        print()
+        print(f"Generated by `python tools/dump_plans.py` at sf dir `{sf}`.")
+        print("Regenerate after changing any of these operators; the shapes")
+        print("below are also asserted in `tests/test_plans.py`.")
+        for name, note in PICKS:
+            df = reg.queries[name].fn(spark, sf)
+            print(f"\n## {name}\n\n*What to look at:* {note}\n")
+            print("```")
+            print(explain_formatted(df).rstrip())
+            print("```")
     spark.stop()
 
 

@@ -10,9 +10,12 @@ Iceberg snapshot design):
 - Every write (build, append, delete, compact) writes NEW immutable files
   under ``data/<op-uuid>/<table>/`` and then publishes exactly one
   ``_commits/<N>.json``, created exclusively. The commit lists every live
-  file of ``inverted_index``, ``forward``, ``doc_stats``, ``vocab`` and
-  ``tombstones``, the meta values (``total_docs``, ``total_dl``,
-  ``avg_dl``, ``n_buckets``) and the applied streaming ``batch_ids``.
+  file of ``inverted_index``, ``doc_stats`` and ``tombstones``, the meta
+  values (``total_docs``, ``total_dl``, ``avg_dl``, ``n_buckets``) and the
+  applied streaming ``batch_ids``.
+- There is no df table. A term's postings are its df rows: a search
+  counts the live postings of its terms in the plan that scores them
+  (:func:`operators.search.bm25_rank`), so no write maintains df.
 - A reader resolves the latest commit once and reads exactly the files it
   lists, so no later write can change what a running job sees. A crash
   before the publish leaves only unreferenced files: old state or new
@@ -23,9 +26,10 @@ Iceberg snapshot design):
   buckets from the commit driver-side -- the moral equivalent of
   Cassandra's partition-key lookup. Within a file the ``term IN (...)``
   predicate pushes down to parquet row groups.
-- ``load_index`` still returns ``meta`` as the reference's 4-row string
-  table (``load_index.py:101-111`` quirk); search takes N and avg_dl
-  straight from the commit.
+- ``load_index`` still returns the reference's four tables: ``vocab`` is
+  a lazy term count over the live postings, and ``meta`` the 4-row
+  string table (``load_index.py:101-111`` quirk); search takes N and
+  avg_dl straight from the commit.
 """
 
 from __future__ import annotations
@@ -63,9 +67,7 @@ published (a crashed write's output) are removed once they are this old."""
 # tables live in directory names, not in the files.
 _LAYOUT_SCHEMAS = {
     "inverted_index": "term STRING, doc_id STRING, tf BIGINT",
-    "forward": "doc_id STRING, term STRING",
     "doc_stats": "doc_id STRING, title STRING, length BIGINT",
-    "vocab": "term STRING, doc_freq BIGINT",
     "tombstones": "doc_id STRING",
 }
 
@@ -80,6 +82,21 @@ def _normalize_docs(docs: DataFrame) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("title").cast("string").alias("title"),
         "text",
+    )
+
+
+def _detached(df: DataFrame) -> DataFrame:
+    """*df*'s rows under a plan of their own, for a caller's frame entering
+    the engine. Catalyst infers filters from a plan's constraints and
+    copies them across the engine's ``doc_id`` joins onto the index's own
+    scans, where a caller's ``cast(doc_id AS BIGINT) % 7 = 0`` throws
+    under ANSI on an indexed id such as ``'x1'``. Re-wrapping the rows'
+    RDD keeps the rows and drops the constraints; a ``localCheckpoint``
+    keeps both."""
+    jdf = df._jdf
+    return DataFrame(
+        df.sparkSession._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()),
+        df.sparkSession,
     )
 
 
@@ -220,7 +237,7 @@ def _written(spark: SparkSession, index_dir: str, rel: str) -> list[str]:
     """The parquet data files a write left under ``index_dir/rel``, as
     paths relative to *index_dir*. One glob, joined into one string
     JVM-side: py4j round trips per file cost ~0.3 s per 64-bucket table."""
-    depth = "*/" if rel.endswith(("/inverted_index", "/forward")) else ""
+    depth = "*/" if rel.endswith("/inverted_index") else ""
     fs, p = _fs_and_path(spark, f"{index_dir}/{rel}/{depth}part-*.parquet")
     found = fs.globStatus(p)
     if not found:
@@ -230,6 +247,19 @@ def _written(spark: SparkSession, index_dir: str, rel: str) -> list[str]:
         jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(found)
     ).mkString("\n")
     return sorted(s[s.index(f"/{rel}/") + 1 :] for s in listing.split("\n"))
+
+
+def _files(
+    spark: SparkSession, index_dir: str, out: str, base: Snapshot | None = None
+) -> dict[str, list[str]]:
+    """Each table's files after a write: *base*'s files (none for a full
+    rewrite) plus those the write left under *out*. Only the current
+    tables are listed, so the next write after a commit of an older layout
+    drops its extra tables and garbage collection reclaims them."""
+    return {
+        t: (base.files[t] if base else []) + _written(spark, index_dir, f"{out}/{t}")
+        for t in _LAYOUT_SCHEMAS
+    }
 
 
 def _rm(spark: SparkSession, path: str) -> None:
@@ -360,23 +390,29 @@ def _read(
 
 
 def _bucket(rel: str) -> int:
-    """The bucket of a partitioned table's file, from its
-    ``<col>=<bucket>`` directory."""
+    """The term bucket of a postings file, from its ``term_bucket=<b>``
+    directory."""
     return int(rel.rsplit("/", 2)[-2].partition("=")[2])
 
 
-def _write_bucketed(
-    df: DataFrame, path: str, part_col: str, key: str, n_buckets: int
-) -> None:
-    """Write *df* partitioned by ``crc32(key) % n_buckets``; the shuffle
-    on the partition column gives each bucket one writer task (no
-    small-file explosion at high parallelism)."""
+def _write_postings(postings: DataFrame, path: str, n_buckets: int) -> None:
+    """Write *postings* partitioned by ``term_bucket``; the shuffle on the
+    partition column gives each bucket one writer task (no small-file
+    explosion at high parallelism)."""
     (
-        df.withColumn(part_col, term_bucket_col(key, n_buckets))
-        .repartition(part_col)
-        .write.partitionBy(part_col)
+        postings.withColumn("term_bucket", term_bucket_col("term", n_buckets))
+        .repartition("term_bucket")
+        .write.partitionBy("term_bucket")
         .parquet(path)
     )
+
+
+def _live(spark: SparkSession, snap: Snapshot, df: DataFrame) -> DataFrame:
+    """The rows of *df* (a ``doc_id`` table) whose doc *snap* has not
+    tombstoned."""
+    if not snap.files["tombstones"]:
+        return df
+    return df.join(F.broadcast(_read(spark, snap, "tombstones")), "doc_id", "left_anti")
 
 
 def _count_and_total_dl(stats: DataFrame) -> tuple[int, int]:
@@ -397,15 +433,9 @@ def build_index(
 ) -> None:
     """Materialize the index tables under *index_dir* (replaces the
     reference's MapReduce -> getmerge -> Cassandra-batch pipeline, S6/S7,
-    with direct parquet writes) and publish them as one commit.
-
-    Besides the reference's tables this writes a ``forward`` table -- the
-    postings re-keyed by a ``doc_bucket`` partition (``crc32(doc_id) %
-    n_buckets``). It exists purely for maintenance: ``delete_from_index``
-    needs "which terms did these docs contain?" to subtract per-term df
-    deltas, and the term-bucketed postings cannot prune by doc. The
-    forward files of only the deleted docs' buckets answer that -- the
-    classic forward-index space-for-maintenance trade.
+    with direct parquet writes) and publish them as one commit: the
+    term-bucketed postings and doc_stats. N/total_dl come from the
+    written doc_stats.
 
     Over an existing index this publishes a new commit, so readers of the
     old one keep working; a directory in the legacy in-place layout has
@@ -414,45 +444,21 @@ def build_index(
     docs = _normalize_docs(docs)
     base = _latest(spark, index_dir)
     if base is None:
-        for t in (*_LAYOUT_SCHEMAS, "meta", "ingest_log"):
+        for t in (*_LAYOUT_SCHEMAS, "vocab", "forward", "meta", "ingest_log"):
             _rm(spark, f"{index_dir}/{t}")
     out = f"data/{uuid.uuid4().hex}"
-    inverted = index_build.inverted_from_docs(docs)
     _run_concurrently(
-        lambda: _write_bucketed(
-            inverted, f"{index_dir}/{out}/inverted_index", "term_bucket", "term", n_buckets
+        lambda: _write_postings(
+            index_build.inverted_from_docs(docs), f"{index_dir}/{out}/inverted_index", n_buckets
         ),
         lambda: index_build.doc_stats_from_docs(docs).write.parquet(
             f"{index_dir}/{out}/doc_stats"
         ),
     )
-    # vocab/forward re-read this build's own postings directory rather than
-    # recomputing the tokenize shuffle; N/total_dl come from its doc_stats
-    persisted = spark.read.schema(_LAYOUT_SCHEMAS["inverted_index"]).parquet(
-        f"{index_dir}/{out}/inverted_index"
+    counts = _count_and_total_dl(
+        spark.read.schema(_LAYOUT_SCHEMAS["doc_stats"]).parquet(f"{index_dir}/{out}/doc_stats")
     )
-    *_, counts = _run_concurrently(
-        lambda: index_build.vocab_from_inverted(persisted).write.parquet(
-            f"{index_dir}/{out}/vocab"
-        ),
-        lambda: _write_bucketed(
-            persisted.select("doc_id", "term"),
-            f"{index_dir}/{out}/forward",
-            "doc_bucket",
-            "doc_id",
-            n_buckets,
-        ),
-        lambda: _count_and_total_dl(
-            spark.read.schema(_LAYOUT_SCHEMAS["doc_stats"]).parquet(
-                f"{index_dir}/{out}/doc_stats"
-            )
-        ),
-    )
-    files = {
-        t: _written(spark, index_dir, f"{out}/{t}")
-        for t in ("inverted_index", "forward", "doc_stats", "vocab")
-    }
-    _commit(spark, index_dir, base, files | {"tombstones": []}, counts, n_buckets, [])
+    _commit(spark, index_dir, base, _files(spark, index_dir, out), counts, n_buckets, [])
 
 
 def clone_index(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
@@ -510,25 +516,23 @@ def append_to_index(
     the existing corpus (the reference can only rebuild from scratch --
     its MapReduce+Cassandra pipeline has no append path).
 
-    Cost model -- nothing here scans the existing postings:
+    Cost model -- of the committed index only the tombstones are read:
 
-    - **postings / forward / doc_stats** gain new files holding only the
-      new docs' rows (one tokenize pass over the batch); the commit lists
-      them next to the existing files;
-    - **vocab** (df per term) merges a DELTA: per-term df of the new
-      docs, full-outer-summed into the committed vocab. Integer adds --
-      exact -- and term-cardinality-sized work;
+    - **postings / doc_stats** gain new files holding only the new docs'
+      rows (one tokenize pass over the batch); the commit lists them next
+      to the existing files, and search counts df over them like any
+      other postings;
     - **meta** (N, total_dl) is the committed pair plus this batch's own
       count/length-sum; avg_dl derives from the integers, bit-identical
       to a full recompute.
 
     **Determinism requirement**: *new_docs* is evaluated several times
-    (postings, forward, doc_stats, the vocab df-delta and the batch
-    count each run as their own concurrent job), so the frame must be
-    deterministic: a non-deterministic source can make the tables
-    silently disagree. Pass ``new_docs.localCheckpoint(eager=True)`` for
-    such sources; the streaming ``foreachBatch`` path always hands in a
-    deterministic materialized batch.
+    (the tombstone clash check, postings, doc_stats and the batch count
+    each run as their own job), so the frame must be deterministic: a
+    non-deterministic source can make the tables silently disagree. Pass
+    ``new_docs.localCheckpoint(eager=True)`` for such sources; the
+    streaming ``foreachBatch`` path always hands in a deterministic
+    materialized batch.
 
     Appending a doc_id that currently sits in the tombstones is rejected:
     its old postings still exist, so un-tombstoning it would resurrect
@@ -547,7 +551,7 @@ def append_to_index(
         return
     if base.files["tombstones"]:
         clash = (
-            new_docs.select("doc_id")
+            _detached(new_docs.select("doc_id"))
             .join(F.broadcast(_read(spark, base, "tombstones")), "doc_id", "left_semi")
             .limit(1)
             .collect()
@@ -558,49 +562,21 @@ def append_to_index(
                 "would resurrect its dead postings -- compact_index() first"
             )
     out = f"data/{uuid.uuid4().hex}"
-    inverted_new = index_build.inverted_from_docs(new_docs)
     stats_new = index_build.doc_stats_from_docs(new_docs)
-    delta = index_build.vocab_from_inverted(inverted_new).withColumnRenamed(
-        "doc_freq", "delta_df"
-    )
-    vocab = (
-        _read(spark, base, "vocab")
-        .join(delta, "term", "full_outer")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("doc_freq"), F.lit(0))
-                + F.coalesce(F.col("delta_df"), F.lit(0))
-            ).alias("doc_freq"),
-        )
-    )
     *_, (dn, ddl) = _run_concurrently(
-        lambda: _write_bucketed(
-            inverted_new,
+        lambda: _write_postings(
+            index_build.inverted_from_docs(new_docs),
             f"{index_dir}/{out}/inverted_index",
-            "term_bucket",
-            "term",
-            base.n_buckets,
-        ),
-        lambda: _write_bucketed(
-            inverted_new.select("doc_id", "term"),
-            f"{index_dir}/{out}/forward",
-            "doc_bucket",
-            "doc_id",
             base.n_buckets,
         ),
         lambda: stats_new.write.parquet(f"{index_dir}/{out}/doc_stats"),
-        lambda: vocab.write.parquet(f"{index_dir}/{out}/vocab"),
         lambda: _count_and_total_dl(stats_new),
     )
-    files = dict(base.files, vocab=_written(spark, index_dir, f"{out}/vocab"))
-    for t in ("inverted_index", "forward", "doc_stats"):
-        files[t] = base.files[t] + _written(spark, index_dir, f"{out}/{t}")
     _commit(
         spark,
         index_dir,
         base,
-        files,
+        _files(spark, index_dir, out, base),
         (base.total_docs + dn, base.total_dl + ddl),
         base.n_buckets,
         base.batch_ids + ([] if batch_id is None else [batch_id]),
@@ -610,87 +586,41 @@ def append_to_index(
 def delete_from_index(doc_ids: DataFrame, index_dir: str) -> None:
     """Tombstone deletes: the other half of incremental maintenance.
 
-    The corpus-sized tables (postings, forward, doc_stats) are NOT
-    rewritten. The doc ids become a new ``tombstones`` file that search
+    The corpus-sized tables (postings, doc_stats) are NOT rewritten. The
+    deleted docs' ids become a new ``tombstones`` file that search
     anti-joins (broadcast -- tombstone sets are tiny relative to an index
-    worth keeping), and the derived global statistics are corrected
-    immediately and INCREMENTALLY:
+    worth keeping) before it counts df, and N / total_dl subtract the
+    deleted docs' doc_stats rows in the same commit.
 
-    - per-term df subtracts a delta computed from only the ``forward``
-      files of the deleted docs' doc buckets -- a ``|batch| / n_buckets``
-      fraction of one postings-sized scan;
-    - N / total_dl subtract the deleted docs' doc_stats rows.
-
-    Stats correctness is NOT deferred to compaction -- BM25 idf must
-    reflect the live corpus or every score drifts (verified: post-delete
-    search hash-equals a from-scratch index of the surviving docs).
-    Already-tombstoned ids in the batch are ignored (idempotent), so a
-    delta can never be subtracted twice. :func:`compact_index` is the
-    space-reclamation half."""
+    Only ids with a live doc_stats row are deleted: an id the index never
+    held, or one already tombstoned, is ignored, so a doc is subtracted
+    at most once and the tombstones only ever name indexed docs. Stats
+    correctness is NOT deferred to compaction -- BM25 idf must reflect
+    the live corpus or every score drifts (verified: post-delete search
+    hash-equals a from-scratch index of the surviving docs).
+    :func:`compact_index` is the space-reclamation half."""
     spark = doc_ids.sparkSession
     base = snapshot(spark, index_dir)
-    ids = doc_ids.select(F.col("doc_id").cast("string").alias("doc_id")).distinct()
-    if base.files["tombstones"]:
-        ids = ids.join(F.broadcast(_read(spark, base, "tombstones")), "doc_id", "left_anti")
-    # one materialization feeds the tombstone file, the df delta and the
-    # stats delta, so all three see the same id set
-    ids = ids.localCheckpoint(eager=True)
-    buckets = {
-        r["b"]
-        for r in ids.select(term_bucket_col("doc_id", base.n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    }
-    if not buckets:
+    ids = _detached(doc_ids.select(F.col("doc_id").cast("string").alias("doc_id")))
+    gone = _live(
+        spark, base, _read(spark, base, "doc_stats").join(F.broadcast(ids), "doc_id", "left_semi")
+    )
+    # one materialization feeds the stats delta and the tombstone file, so
+    # both see the same docs
+    gone = gone.select("doc_id", "length").localCheckpoint(eager=True)
+    dn, ddl = _count_and_total_dl(gone)
+    if not dn:
         return
     out = f"data/{uuid.uuid4().hex}"
-    vocab = (
-        _read(spark, base, "vocab")
-        .join(_df_delta_for_ids(spark, base, ids, buckets), "term", "left")
-        .select(
-            "term",
-            (F.col("doc_freq") - F.coalesce(F.col("delta_df"), F.lit(0))).alias(
-                "doc_freq"
-            ),
-        )
-        .where(F.col("doc_freq") > 0)
-    )
-    gone = _read(spark, base, "doc_stats").join(F.broadcast(ids), "doc_id", "left_semi")
-    *_, (dn, ddl) = _run_concurrently(
-        lambda: ids.coalesce(1).write.parquet(f"{index_dir}/{out}/tombstones"),
-        lambda: vocab.write.parquet(f"{index_dir}/{out}/vocab"),
-        lambda: _count_and_total_dl(gone),
-    )
-    files = dict(
-        base.files,
-        vocab=_written(spark, index_dir, f"{out}/vocab"),
-        tombstones=base.files["tombstones"]
-        + _written(spark, index_dir, f"{out}/tombstones"),
-    )
+    gone.select("doc_id").coalesce(1).write.parquet(f"{index_dir}/{out}/tombstones")
     _commit(
         spark,
         index_dir,
         base,
-        files,
+        _files(spark, index_dir, out, base),
         (base.total_docs - dn, base.total_dl - ddl),
         base.n_buckets,
         base.batch_ids,
-    )
-
-
-def _df_delta_for_ids(
-    spark: SparkSession, snap: Snapshot, ids: DataFrame, buckets: set[int]
-) -> DataFrame:
-    """Per-term df of the given doc ids, read from only the committed
-    forward files of *buckets*, the ids' doc buckets (<= |batch|, collected
-    driver-side -- the file pick is what turns the delta into a fraction
-    of one postings scan; asserted in tests/test_engine.py)."""
-    files = [p for p in snap.files["forward"] if _bucket(p) in buckets]
-    return (
-        _read(spark, snap, "forward", files)
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("delta_df"))
     )
 
 
@@ -698,46 +628,35 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     """Space reclamation for tombstone deletes: rewrite the corpus-sized
     tables minus the tombstoned docs and publish them with no tombstones.
 
-    Result-invariant by construction -- vocab and N/avg_dl were already
-    corrected at delete time, so compaction only swaps "mask dead
-    postings at search time" for "dead postings gone" (verified by
-    ``bm25_search_after_compact`` hash-equaling the after-delete
-    oracle). Run it when the tombstone set or dead-posting fraction
-    crosses a threshold: it bounds both the broadcast anti-join set search
-    pays per query and the dead bytes every scan reads past. Also the
-    enabler for re-adding a deleted doc_id (see :func:`append_to_index`).
-    The bucket-partitioned layouts are preserved; the replaced files stay
-    readable for :data:`GC_GRACE_S`."""
+    Result-invariant by construction -- N/avg_dl were already corrected
+    at delete time and search's df counts only live postings, so
+    compaction only swaps "mask dead postings at search time" for "dead
+    postings gone" (verified by ``bm25_search_after_compact``
+    hash-equaling the after-delete oracle). Run it when the tombstone set
+    or dead-posting fraction crosses a threshold: it bounds both the
+    broadcast anti-join set search pays per query and the dead bytes
+    every scan reads past. Also the enabler for re-adding a deleted
+    doc_id (see :func:`append_to_index`). The bucket-partitioned layout is
+    preserved; the replaced files stay readable for :data:`GC_GRACE_S`."""
     base = snapshot(spark, index_dir)
     if not base.files["tombstones"]:
         return
-    tomb = F.broadcast(_read(spark, base, "tombstones"))
     out = f"data/{uuid.uuid4().hex}"
 
     def live(table: str) -> DataFrame:
-        return _read(spark, base, table).join(tomb, "doc_id", "left_anti")
+        return _live(spark, base, _read(spark, base, table))
 
     _run_concurrently(
-        lambda: _write_bucketed(
-            live("inverted_index"),
-            f"{index_dir}/{out}/inverted_index",
-            "term_bucket",
-            "term",
-            base.n_buckets,
-        ),
-        lambda: _write_bucketed(
-            live("forward"), f"{index_dir}/{out}/forward", "doc_bucket", "doc_id", base.n_buckets
+        lambda: _write_postings(
+            live("inverted_index"), f"{index_dir}/{out}/inverted_index", base.n_buckets
         ),
         lambda: live("doc_stats").write.parquet(f"{index_dir}/{out}/doc_stats"),
     )
-    files = dict(base.files, tombstones=[])
-    for t in ("inverted_index", "forward", "doc_stats"):
-        files[t] = _written(spark, index_dir, f"{out}/{t}")
     _commit(
         spark,
         index_dir,
         base,
-        files,
+        _files(spark, index_dir, out),
         (base.total_docs, base.total_dl),
         base.n_buckets,
         base.batch_ids,
@@ -751,15 +670,16 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     """Operability report for a persisted index: the numbers that decide
     WHEN to run :func:`compact_index` -- live vs tombstoned docs, total
     vs dead postings (rows still on disk that belong to deleted docs and
-    every scan reads past), and the dead fraction. One postings count +
-    one broadcast-semi-join count; no tokenize, no full rewrite.
+    every scan reads past), and the dead fraction. Live docs are the
+    commit's N; one postings count, plus a tombstone count and a
+    broadcast-semi-join count when there are tombstones; no tokenize, no
+    full rewrite.
 
     Returns one row: ``live_docs, n_tombstones, total_postings,
     dead_postings, dead_fraction, n_term_buckets``."""
     snap = snapshot(spark, index_dir)
     postings = _read(spark, snap, "inverted_index")
     total_postings = postings.count()
-    total_docs = _read(spark, snap, "doc_stats").count()
     if not snap.files["tombstones"]:
         n_tomb, dead = 0, 0
     else:
@@ -767,7 +687,7 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         n_tomb = tomb.distinct().count()
         dead = postings.join(F.broadcast(tomb), "doc_id", "left_semi").count()
     base = spark.createDataFrame(
-        [(total_docs - n_tomb, n_tomb, total_postings, dead, snap.n_buckets)],
+        [(snap.total_docs, n_tomb, total_postings, dead, snap.n_buckets)],
         "live_docs long, n_tombstones long, total_postings long, "
         "dead_postings long, n_term_buckets int",
     )
@@ -788,8 +708,11 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 def load_index(spark: SparkSession, index_dir: str) -> IndexTables:
     """S2: the four index tables of the latest commit as DataFrames.
     ``term_bucket`` is derived from the term (:func:`term_bucket_col`);
-    ``meta`` is the reference's 4-row string table."""
+    ``vocab`` is the df of each term, counted lazily over the postings
+    the tombstones leave live; ``meta`` is the reference's 4-row string
+    table."""
     snap = snapshot(spark, index_dir)
+    postings = _read(spark, snap, "inverted_index")
     meta = spark.createDataFrame(
         [
             (k, str(getattr(snap, k)))
@@ -799,10 +722,10 @@ def load_index(spark: SparkSession, index_dir: str) -> IndexTables:
     )
     return IndexTables(
         doc_stats=_read(spark, snap, "doc_stats"),
-        inverted_index=_read(spark, snap, "inverted_index").withColumn(
+        inverted_index=postings.withColumn(
             "term_bucket", term_bucket_col("term", snap.n_buckets).cast("int")
         ),
-        vocab=_read(spark, snap, "vocab"),
+        vocab=index_build.vocab_from_inverted(_live(spark, snap, postings)),
         meta=meta,
     )
 
@@ -817,17 +740,19 @@ def search(
     """BM25 top-k over the **persisted** index (reference ``query.py``
     lifecycle, SURVEY.md section 3.2) over the latest commit, as one SQL
     plan (:func:`operators.search.bm25_rank`): four Spark jobs -- the
-    vocab and doc_stats broadcasts, the partial-aggregate shuffle and the
-    result -- plus one broadcast each for tombstones and ``allowed``.
+    shuffle of the term-filtered postings for the df window, the
+    broadcast of the doc_stats join, the partial-aggregate shuffle and
+    the result -- plus one broadcast each for tombstones and ``allowed``.
 
     The postings read is only the committed files of the query terms'
-    buckets, picked driver-side; vocab, doc_stats and tombstones are the
+    buckets, picked driver-side; each term's df is the count of its
+    postings the tombstones leave live. doc_stats and tombstones are the
     commit's files, and N / avg_dl come from the commit itself, inlined
     as exact DOUBLE literals.
 
     ``allowed`` (optional, a ``doc_id`` frame) restricts the CANDIDATES
-    to a metadata facet via a broadcast semi join applied after bucket +
-    term pruning -- standard faceted-search semantics: idf/avg_dl stay
+    to a metadata facet via a broadcast semi join applied after the df
+    count -- standard faceted-search semantics: idf/avg_dl stay
     corpus-global (the query's notion of term rarity must not change
     with the facet). A facet set is metadata-sized, hence broadcast."""
     snap = snapshot(spark, index_dir)
@@ -839,17 +764,12 @@ def search(
         "inverted_index",
         [p for p in snap.files["inverted_index"] if _bucket(p) in buckets],
     )
-    # the tombstone mask covers only the query's postings; vocab and
-    # N/avg_dl were corrected at delete time, so masking the postings is
-    # the only search-side change
-    tombstones = _read(spark, snap, "tombstones") if snap.files["tombstones"] else None
     return search_ops.bm25_rank(
         postings,
-        _read(spark, snap, "vocab"),
         _read(spark, snap, "doc_stats"),
         query,
         k,
         stats=(snap.total_docs, snap.avg_dl),
-        tombstones=tombstones,
-        allowed=allowed,
+        tombstones=_read(spark, snap, "tombstones") if snap.files["tombstones"] else None,
+        allowed=None if allowed is None else _detached(allowed),
     )

@@ -912,8 +912,8 @@ def _neardup_store(spark: SparkSession, sf_dir: str) -> str:
     the stop-shingle list. This is the state a production pipeline keeps
     between ingest batches -- all three tables are append-only (a new
     batch's rows are appended after it is admitted; the stop list is
-    refreshed by a df-delta merge exactly like the BM25 vocab in
-    ``engine.append_to_index``)."""
+    refreshed by a df-delta merge: the batch's per-shingle df added to
+    the stored counts)."""
     hit = _NEARDUP_STORE.get(sf_dir)
     if hit is not None and hit[0] is spark:
         return hit[1]

@@ -6,20 +6,22 @@ Reference lifecycle (SURVEY.md section 3.2): scan 4 Cassandra tables with
 computes per-(term,doc) BM25 -> reduceByKey sum -> ``takeOrdered(10)``.
 
 Here :func:`bm25_rank` states the whole query as one SQL text over the
-index frames (bound as kwargs): the postings/vocab IN-filters prune at the
-parquet scan, vocab joins in as a broadcast, scoring is SQL arithmetic
-inside whole-stage codegen, the per-doc sum is a two-phase hash aggregate,
-and the top-k plans as TakeOrderedAndProject (per-partition heaps -- no
-global sort) with ``row_number()`` directly on its single sorted
-partition. No Python executes per row anywhere.
+index frames (bound as kwargs): the postings IN-filter prunes at the
+parquet scan, each term's df is a window count over those same postings
+(no df table is read), scoring is SQL arithmetic inside whole-stage
+codegen, the per-doc sum is a two-phase hash aggregate, and the top-k
+plans as TakeOrderedAndProject (per-partition heaps -- no global sort)
+with ``row_number()`` directly on its single sorted partition. No Python
+executes per row anywhere.
 
-A warm search over a persisted commit runs four Spark jobs: the vocab
-broadcast, the doc_stats broadcast (doc_stats is under the auto-broadcast
-threshold; a larger one shuffle-joins instead), the map stage of the
-partial-aggregate shuffle, and the result job (final aggregate, top-k,
-rank). Tombstones add one broadcast job, a facet one more. The from-corpus
-path also broadcasts its one-row corpus-stats aggregate, where a commit
-inlines N and avg_dl as literals.
+A warm search over a persisted commit runs four Spark jobs: the map stage
+of the shuffle that groups the term-filtered postings by term for the df
+window, the broadcast of the doc_stats join (AQE broadcasts the smaller
+side; with both over the threshold it shuffle-joins instead), the map
+stage of the partial-aggregate shuffle, and the result job (final
+aggregate, top-k, rank). Tombstones add one broadcast job, a facet one more. The
+from-corpus path also broadcasts its one-row corpus-stats aggregate,
+where a commit inlines N and avg_dl as literals.
 
 Determinism beyond the reference: scores rounded to 6 decimals and ties
 broken by ``doc_id`` ascending (the reference's ``takeOrdered`` tie order
@@ -43,7 +45,6 @@ DEFAULT_K = 10
 
 def bm25_rank(
     inverted: DataFrame,
-    vocab: DataFrame,
     doc_stats: DataFrame,
     query: str = DEFAULT_QUERY,
     k: int = DEFAULT_K,
@@ -55,12 +56,15 @@ def bm25_rank(
     """Rank documents for *query* against index DataFrames, as one
     ``spark.sql`` text with the frames bound as kwargs.
 
-    ``stats`` is ``(N, avg_dl)`` when the caller knows them (a persisted
-    commit); they are inlined as exact DOUBLE literals. Without it they
-    come from the ``corpus_stats_agg`` aggregate over *doc_stats*,
-    cross-joined as one broadcast row. ``tombstones`` (anti) and
-    ``allowed`` (semi) are optional ``doc_id`` frames joined to the
-    postings as broadcasts after term pruning.
+    Each term's df is the count of its live postings, taken as a window
+    over the term-filtered postings this plan reads anyway. ``stats`` is
+    ``(N, avg_dl)`` when the caller knows them (a persisted commit); they
+    are inlined as exact DOUBLE literals. Without it they come from the
+    ``corpus_stats_agg`` aggregate over *doc_stats*, cross-joined as one
+    broadcast row. ``tombstones`` (anti) and ``allowed`` (semi) are
+    optional ``doc_id`` frames joined as broadcasts: tombstones before
+    the df count, so a deleted doc counts nowhere, and ``allowed`` after
+    it, so a facet restricts the candidates without changing any idf.
 
     Returns ``rank int, doc_id string, title string, score double`` --
     the reference's output line format (``app/query.py:95-96``).
@@ -69,14 +73,17 @@ def bm25_rank(
     # a zero-term query would be "IN ()", a syntax error; the tokenizer
     # never produces '', so this matches no posting
     in_list = ", ".join(f"'{t}'" for t in terms) or "''"
-    frames = {"inverted": inverted, "vocab": vocab, "doc_stats": doc_stats}
-    joins = ""
-    for name, frame, join in (("tombstones", tombstones, "ANTI"), ("allowed", allowed, "SEMI")):
+    frames = {"inverted": inverted, "doc_stats": doc_stats}
+    joins = {"tombstones": "", "allowed": ""}
+    for name, frame, join, side in (
+        ("tombstones", tombstones, "ANTI", "i"),
+        ("allowed", allowed, "SEMI", "p"),
+    ):
         if frame is not None:
             frames[name] = frame
-            joins += f"""
+            joins[name] = f"""
   LEFT {join} JOIN (SELECT /*+ BROADCAST */ doc_id FROM {{{name}}}) {name}
-    ON i.doc_id = {name}.doc_id"""
+    ON {side}.doc_id = {name}.doc_id"""
     if stats is None:
         frames["stats"] = index_build.corpus_stats_agg(doc_stats, n_alias="n_docs")
         n_docs, avg_dl = "st.n_docs", "st.avg_dl"
@@ -85,7 +92,7 @@ def bm25_rank(
         # repr() round-trips a float exactly; a decimal literal would not
         n_docs, avg_dl = (f"CAST('{float(x)!r}' AS DOUBLE)" for x in stats)
         stats_join = ""
-    score = bm25.score_sql("i.tf", "s.length", avg_dl, n_docs, "v.doc_freq")
+    score = bm25.score_sql("p.tf", "s.length", avg_dl, n_docs, "p.df")
     # The title rides the aggregate key (it depends on doc_id alone), so
     # no join follows the top-k and row_number() runs on
     # TakeOrderedAndProject's single sorted partition with no exchange.
@@ -97,16 +104,18 @@ def bm25_rank(
     # differently across engines/runs; the final round-to-6 absorbs the
     # 1e-9 quantization (repo-wide dsum convention).
     text = f"""
-WITH top AS (
-  SELECT i.doc_id, s.title, round({sql_dsum(score, 9)}, 6) AS score
-  FROM {{inverted}} i{joins}
-  JOIN (SELECT /*+ BROADCAST */ term, doc_freq FROM {{vocab}} WHERE term IN ({in_list})) v
-    ON i.term = v.term
-  JOIN {{doc_stats}} s ON i.doc_id = s.doc_id
-  {stats_join}
+WITH postings AS (
+  SELECT i.doc_id, i.tf, count(*) OVER (PARTITION BY i.term) AS df
+  FROM {{inverted}} i{joins["tombstones"]}
   WHERE i.term IN ({in_list})
-  GROUP BY i.doc_id, s.title
-  ORDER BY score DESC, i.doc_id ASC
+),
+top AS (
+  SELECT p.doc_id, s.title, round({sql_dsum(score, 9)}, 6) AS score
+  FROM postings p{joins["allowed"]}
+  JOIN {{doc_stats}} s ON p.doc_id = s.doc_id
+  {stats_join}
+  GROUP BY p.doc_id, s.title
+  ORDER BY score DESC, p.doc_id ASC
   LIMIT {int(k)}
 )
 SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
@@ -125,7 +134,6 @@ def bm25_search(
     """End-to-end flagship: build the index from the corpus and rank."""
     return bm25_rank(
         index_build.inverted_index(spark, sf_dir),
-        index_build.vocab(spark, sf_dir),
         index_build.doc_stats(spark, sf_dir),
         query,
         k,
@@ -293,7 +301,6 @@ def bm25_search_filtered(
     )
     return bm25_rank(
         index_build.inverted_index(spark, sf_dir),
-        index_build.vocab(spark, sf_dir),
         index_build.doc_stats(spark, sf_dir),
         query,
         k,

@@ -24,7 +24,6 @@ from ..operators.index_build import (
     doc_stats_from_docs,
     inverted_from_docs,
     sql_docs_cte_over,
-    vocab_from_inverted,
 )
 from ..operators.search import bm25_rank, sql_bm25
 from ..registry import REFERENCE_DATA_DIR, Registry
@@ -63,7 +62,7 @@ def load_reference_corpus(
 # stores DataFrames BOUND to the session that built them: after a
 # spark.stop(), a fresh session must rebuild, not inherit frames whose
 # plans reference the dead JVM state.
-_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
+_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _reference_index(spark: SparkSession, data_dir: str):
@@ -78,9 +77,8 @@ def _reference_index(spark: SparkSession, data_dir: str):
         # then operate on sane partitions).
         docs = load_reference_corpus(spark, data_dir).coalesce(8).persist()
         inverted = inverted_from_docs(docs).persist()
-        vocab = vocab_from_inverted(inverted).persist()
         stats = doc_stats_from_docs(docs).persist()
-        _INDEX_CACHE[key] = (inverted, vocab, stats)
+        _INDEX_CACHE[key] = (inverted, stats)
     return _INDEX_CACHE[key]
 
 
@@ -88,10 +86,9 @@ def warm_reference_index(
     spark: SparkSession, data_dir: str = REFERENCE_DATA_DIR
 ) -> None:
     """Force-materialize the cached fixture index (the 1000-small-file
-    wholetext read + three persists) so bench.py can charge the one-time
+    wholetext read + the persists) so bench.py can charge the one-time
     cache fill to a build phase instead of the first smoke query."""
-    inverted, vocab, stats = _reference_index(spark, data_dir)
-    for df in (inverted, vocab, stats):
+    for df in _reference_index(spark, data_dir):
         df.count()
 
 
@@ -99,8 +96,8 @@ def reference_search(
     spark: SparkSession, query: str, k: int = 10, data_dir: str = REFERENCE_DATA_DIR
 ) -> DataFrame:
     """BM25 top-k over the reference's own corpus fixture."""
-    inverted, vocab, stats = _reference_index(spark, data_dir)
-    return bm25_rank(inverted, vocab, stats, query, k)
+    inverted, stats = _reference_index(spark, data_dir)
+    return bm25_rank(inverted, stats, query, k)
 
 
 def sql_reference_docs_cte(data_dir: str = REFERENCE_DATA_DIR) -> str:

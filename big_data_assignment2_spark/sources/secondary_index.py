@@ -1,8 +1,7 @@
 """Secondary index over an immutable columnar table: value -> primary-key
 lookup, then stats-pruned point fetch from the primary layout.
 
-The pattern (classic for lakehouse point lookups; the BM25 engine's
-``forward`` table is the same idea for doc_id -> bucket): a table
+The pattern (classic for lakehouse point lookups): a table
 clustered on its PRIMARY key answers key lookups by file skipping, but a
 point query on any OTHER column scans everything. A SECONDARY index is a
 compact two-column projection ``(search_value, primary_key)`` clustered

@@ -4,11 +4,13 @@ micro-batch -- the growing-corpus deployment story (a kafka/file-drop fed
 index that never full-rebuilds), composed from two verified halves:
 
 - the file-source streaming surface (``streaming/events_stream.py``), and
-- the incremental-append maintenance path (``engine.py``), whose vocab
-  df-delta merges are exact integer adds -- so the final index state is a
-  pure function of the ingested set, independent of how the stream chops
-  it into batches. That is what makes this oracle-able: search after N
-  appends must hash-equal one-shot BM25 over the full corpus.
+- the incremental-append maintenance path (``engine.py``), which adds a
+  batch's postings and doc_stats files and exact integer N/total_dl
+  deltas, while search counts df over whatever postings are committed --
+  so the final index state is a pure function of the ingested set,
+  independent of how the stream chops it into batches. That is what
+  makes this oracle-able: search after N appends must hash-equal one-shot
+  BM25 over the full corpus.
 
 The reference has no streaming surface and can only rebuild its index
 from scratch (``app/index.sh`` re-runs both MapReduce jobs).
@@ -49,10 +51,10 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = f"{root}/index"
     docs = index_build.documents_with_title(spark, sf_dir)
 
-    # Each micro-batch append runs several SMALL Spark jobs (postings/
-    # forward/doc_stats writes, vocab merge, batch counts) over one
-    # batch's worth of docs -- at the default 32 shuffle partitions the
-    # fixed per-task overhead dominates every one of them. Pin the
+    # Each micro-batch append runs several SMALL Spark jobs (postings and
+    # doc_stats writes, batch counts) over one batch's worth of docs --
+    # at the default 32 shuffle partitions the fixed per-task overhead
+    # dominates every one of them. Pin the
     # shuffle width down for the ingestion the way _run_to_table pins
     # state partitions, and restore the caller's value; a production
     # deployment sizes it to batch volume instead.

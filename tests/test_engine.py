@@ -104,14 +104,14 @@ def test_index_layout(spark, index_dir):
 def test_bucket_pruning_reaches_scan(spark, index_dir):
     """A search reads exactly the committed postings files of its terms'
     buckets (picked driver-side -- the Cassandra partition-key analog)
-    plus the vocab and doc_stats files; no other postings file is even
-    listed."""
+    plus the doc_stats files; no other postings file is even listed, and
+    df needs no table of its own."""
     q = "data model"
     snap = engine.snapshot(spark, index_dir)
     buckets = {engine.term_bucket_py(t, 8) for t in tokenize_query(q)}
     postings = {p for p in snap.files["inverted_index"] if engine._bucket(p) in buckets}
     assert 0 < len(postings) < len(snap.files["inverted_index"])
-    want = postings | set(snap.files["vocab"]) | set(snap.files["doc_stats"])
+    want = postings | set(snap.files["doc_stats"])
     assert _input_files(engine.search(spark, index_dir, q), index_dir) == want
 
 
@@ -251,17 +251,16 @@ def test_clone_index_is_faithful_and_isolated(spark, sf_dir, tmp_path):
     assert _hits(spark, d_src)
 
     # a source missing a committed file is refused loudly
-    os.remove(f"{d_src}/{engine.snapshot(spark, d_src).files['vocab'][0]}")
+    os.remove(f"{d_src}/{engine.snapshot(spark, d_src).files['doc_stats'][0]}")
     with pytest.raises(FileNotFoundError):
         engine.clone_index(spark, d_src, str(tmp_path / "clone2"))
 
 
 def test_delete_then_append_composes(spark, sf_dir, tmp_path):
     """The OTHER maintenance order: build, delete, THEN append. The append
-    path must not resurrect deleted docs into vocab/N/avg_dl (it merges a
-    df delta into the delete-corrected vocab and adds the batch to the
-    delete-corrected counts) -- a full-postings recompute here would
-    silently re-count the tombstoned docs and drift every idf."""
+    must not resurrect deleted docs into df/N/avg_dl: it adds the batch
+    to the delete-corrected counts, and search keeps masking the deleted
+    docs' postings before it counts df."""
     d_lifecycle = str(tmp_path / "lifecycle")
     d_fresh = str(tmp_path / "fresh")
     docs = index_build.documents_with_title(spark, sf_dir)
@@ -326,18 +325,124 @@ def test_append_tombstoned_id_rejected(spark, sf_dir, tmp_path):
         engine.append_to_index(victim, d)
 
 
+def test_delete_of_never_indexed_id_is_ignored(spark, tmp_path):
+    """Only indexed docs are tombstoned: deleting ``["1", "nope"]`` from
+    docs 1-10 removes one doc, the report agrees with the commit, and
+    ``"nope"`` -- which has no postings -- stays appendable."""
+    d = str(tmp_path / "nope")
+    schema = "doc_id string, title string, text string"
+    docs = [(str(i), f"doc_{i}", "data model") for i in range(1, 11)]
+    engine.build_index(spark.createDataFrame(docs, schema), d, n_buckets=4)
+    engine.delete_from_index(spark.createDataFrame([("1",), ("nope",)], "doc_id string"), d)
+    assert engine.snapshot(spark, d).total_docs == 9
+    stats = engine.index_stats(spark, d).first()
+    assert (stats["live_docs"], stats["n_tombstones"]) == (9, 1)
+    engine.append_to_index(spark.createDataFrame([("nope", "doc_nope", "fresh")], schema), d)
+    assert [r["doc_id"] for r in engine.search(spark, d, "fresh").collect()] == ["nope"]
+
+
+def test_facet_does_not_change_idf(spark, sf_dir, index_dir):
+    """df counts a term's postings before the facet applies: a faceted
+    search scores every allowed doc exactly as the unfaceted search does."""
+    docs = index_build.documents_with_title(spark, sf_dir)
+    n = docs.count()
+    full = {r["doc_id"]: r["score"] for r in engine.search(spark, index_dir, Q, k=n).collect()}
+    allowed = docs.where(F.col("doc_id").cast("long") % 3 == 0).select("doc_id")
+    faceted = engine.search(spark, index_dir, Q, k=n, allowed=allowed).collect()
+    want = {doc: score for doc, score in full.items() if int(doc) % 3 == 0}
+    assert want and {r["doc_id"]: r["score"] for r in faceted} == want
+
+
+def _mixed_id_index(spark, d):
+    """Index docs ``"1"``..``"29"`` plus an appended ``"x1"``, an id an
+    ANSI cast to BIGINT rejects; returns the numeric docs, the frame a
+    caller filters with such a cast."""
+    docs = spark.createDataFrame(
+        [(str(i), f"doc_{i}", f"data model w{i % 4}") for i in range(1, 30)],
+        "doc_id string, title string, text string",
+    )
+    engine.build_index(docs, d, n_buckets=4)
+    engine.append_to_index(spark.createDataFrame([("x1", "doc_x1", "data w1")], docs.schema), d)
+    return docs
+
+
+def test_search_facet_predicate_stays_off_the_index(spark, tmp_path):
+    """A caller's predicate on its ``allowed`` frame filters the facet
+    only: Catalyst must not copy ``cast(doc_id AS BIGINT)`` across the
+    doc_id join onto the postings, where it would throw on ``'x1'``."""
+    d = str(tmp_path / "facet")
+    docs = _mixed_id_index(spark, d)
+    odd = docs.where("cast(doc_id AS BIGINT) % 2 = 1").select("doc_id")
+    got = engine.search(spark, d, "data", k=50, allowed=odd).collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(str(i) for i in range(1, 30, 2))
+
+
+def test_delete_predicate_stays_off_the_index(spark, tmp_path):
+    """A caller's predicate on the ids to delete must not run on the
+    index's doc_stats or tombstones."""
+    d = str(tmp_path / "delete")
+    docs = _mixed_id_index(spark, d)
+    engine.delete_from_index(docs.where("cast(doc_id AS BIGINT) % 7 = 0").select("doc_id"), d)
+    assert engine.snapshot(spark, d).total_docs == 30 - 4
+    hits = {r["doc_id"] for r in engine.search(spark, d, "data", k=50).collect()}
+    assert hits == {str(i) for i in range(1, 30) if i % 7} | {"x1"}
+
+
+def test_append_predicate_stays_off_the_index(spark, tmp_path):
+    """A caller's predicate on the appended docs must not run on the
+    tombstones the clash check reads (here holding ``'x1'``)."""
+    d = str(tmp_path / "append")
+    docs = _mixed_id_index(spark, d)
+    engine.delete_from_index(spark.createDataFrame([("x1",)], "doc_id string"), d)
+    new = spark.createDataFrame(
+        [(str(i), f"doc_{i}", "data fresh") for i in range(40, 44)], docs.schema
+    )
+    engine.append_to_index(new.where("cast(doc_id AS BIGINT) % 2 = 1"), d)
+    hits = {r["doc_id"] for r in engine.search(spark, d, "fresh", k=50).collect()}
+    assert hits == {"41", "43"}
+
+
+def test_older_layout_commit_still_reads(spark, sf_dir, tmp_path, monkeypatch):
+    """A commit that also lists ``vocab`` and ``forward`` files (the
+    layout before search counted df itself) still serves reads with those
+    tables ignored; the next write lists only the current tables, so
+    garbage collection reclaims the old files."""
+    import json
+
+    d = str(tmp_path / "older")
+    docs = index_build.documents_with_title(spark, sf_dir)
+    engine.build_index(docs.where(_did() % 2 == 0), d, n_buckets=8)
+    hits = _hits(spark, d)
+    path = f"{d}/_commits/0.json"
+    with open(path) as f:
+        body = json.load(f)
+    for t in ("vocab", "forward"):
+        os.makedirs(f"{d}/data/older/{t}")
+        open(f"{d}/data/older/{t}/part-0.parquet", "w").write("not read")
+        body["files"][t] = [f"data/older/{t}/part-0.parquet"]
+    with open(path, "w") as f:
+        json.dump(body, f)
+    assert _hits(spark, d) == hits and len(hits) > 0
+    assert engine.load_index(spark, d).vocab.count() > 0
+    monkeypatch.setattr(engine, "GC_GRACE_S", 0.0)
+    engine.append_to_index(docs.where(_did() % 2 == 1), d)
+    assert set(engine.snapshot(spark, d).files) == {"inverted_index", "doc_stats", "tombstones"}
+    assert not os.path.exists(f"{d}/data/older")
+
+
 def test_append_scans_no_corpus_sized_table(spark, sf_dir, tmp_path, monkeypatch):
-    """The append cost model: ONE tokenize pass over the new docs plus
-    metadata-sized reads (the committed vocab for the df-delta merge).
-    The persisted postings and forward tables -- the corpus-sized ones --
-    must never be read, or append degrades to O(index) per batch;
-    doc_stats (row-per-corpus-doc) must not be read either: N/total_dl
-    update from the commit plus the batch alone."""
+    """The append cost model: ONE tokenize pass over the new docs, and of
+    the committed index only the tombstones (the clash check). Postings
+    and doc_stats -- the corpus-sized tables -- must never be read, or
+    append degrades to O(index) per batch: N/total_dl update from the
+    commit plus the batch alone, and df is counted at search time."""
     from pyspark.sql.readwriter import DataFrameReader
 
     d = str(tmp_path / "io")
     docs = index_build.documents_with_title(spark, sf_dir)
     engine.build_index(docs.where(F.col("doc_id").cast("long") % 2 == 0), d, n_buckets=8)
+    engine.delete_from_index(docs.where(F.col("doc_id").cast("long") % 10 == 0).select("doc_id"), d)
+    tombstones = {f"{d}/{p}" for p in engine.snapshot(spark, d).files["tombstones"]}
 
     read_paths: list[str] = []
     orig = DataFrameReader.parquet
@@ -348,12 +453,7 @@ def test_append_scans_no_corpus_sized_table(spark, sf_dir, tmp_path, monkeypatch
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     engine.append_to_index(docs.where(F.col("doc_id").cast("long") % 2 == 1), d)
-    corpus_scaled = [
-        p
-        for p in read_paths
-        if "inverted_index" in p or "forward" in p or "doc_stats" in p
-    ]
-    assert corpus_scaled == [], corpus_scaled
+    assert tombstones and set(read_paths) == tombstones, read_paths
 
 
 @pytest.mark.parametrize("seed", [11, 23])
@@ -424,8 +524,9 @@ def test_maintenance_soak_cycles(spark, sf_dir, tmp_path):
     compaction in the middle, then verify the searchable state equals a
     from-scratch index of exactly the surviving documents. Single
     lifecycle steps are covered above; this pins that the invariants
-    COMPOSE over many cycles (vocab df-deltas are exact integer merges,
-    so no drift is possible -- this test is what proves that claim)."""
+    COMPOSE over many cycles (N/total_dl deltas are exact integer adds
+    and df is counted from the live postings, so no drift is possible --
+    this test is what proves that claim)."""
     d = str(tmp_path / "soak")
     d_fresh = str(tmp_path / "soak_fresh")
     docs = index_build.documents_with_title(spark, sf_dir)
@@ -449,44 +550,6 @@ def test_maintenance_soak_cycles(spark, sf_dir, tmp_path):
     want = engine.search(spark, d_fresh, Q).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) > 0
-
-
-def test_delete_delta_prunes_forward_partitions(spark, sf_dir, tmp_path):
-    """The delete df-delta reads exactly the committed forward files of
-    the deleted docs' doc buckets -- that file pick is what makes delete
-    cost |batch|/n_buckets of a postings scan instead of all of it."""
-    d = str(tmp_path / "prune")
-    docs = index_build.documents_with_title(spark, sf_dir)
-    engine.build_index(docs, d, n_buckets=8)
-    ids = docs.orderBy("doc_id").limit(3).select("doc_id").localCheckpoint()
-    snap = engine.snapshot(spark, d)
-    buckets = {engine.term_bucket_py(r["doc_id"], 8) for r in ids.collect()}
-    delta = engine._df_delta_for_ids(spark, snap, ids, buckets)
-    want_files = {p for p in snap.files["forward"] if engine._bucket(p) in buckets}
-    assert 0 < len(want_files) < len(snap.files["forward"])
-    assert _input_files(delta, d) == want_files
-    # and the delta itself is correct: per-term df of exactly those docs
-    want = {
-        (r["term"], r["doc_freq"])
-        for r in index_build.vocab_from_inverted(
-            index_build.inverted_from_docs(docs.join(ids, "doc_id", "semi"))
-        ).collect()
-    }
-    got = {(r["term"], r["delta_df"]) for r in delta.collect()}
-    assert got == want
-
-
-def test_delete_requires_forward_table(spark, sf_dir, tmp_path):
-    """Deleting from an index in the legacy in-place layout (table
-    directories, no commit log -- e.g. one that predates the forward
-    table) must fail with a clear rebuild message, not an opaque path
-    error."""
-    d = str(tmp_path / "old_layout")
-    docs = index_build.documents_with_title(spark, sf_dir)
-    index_build.doc_stats_from_docs(docs).write.parquet(f"{d}/doc_stats")
-    index_build.inverted_from_docs(docs).write.parquet(f"{d}/inverted_index")
-    with pytest.raises(ValueError, match="rebuild"):
-        engine.delete_from_index(docs.limit(1).select("doc_id"), d)
 
 
 def test_batched_append_redelivery_is_noop(spark, sf_dir, tmp_path):
@@ -554,11 +617,11 @@ def test_batched_append_concurrent_torn_interleaving_recovers(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """The per-batch table writes run CONCURRENTLY, so a failure can land
-    while the other tables' files -- postings, forward, doc_stats and the
-    merged vocab -- are written (here the batch-count job fails). Nothing
-    was published, so the redelivery starts again from the old commit:
-    vocab is not merged twice, N is not doubled, and the index equals a
-    clean one-shot build of the full corpus."""
+    while the other tables' files -- postings and doc_stats -- are
+    written (here the batch-count job fails). Nothing was published, so
+    the redelivery starts again from the old commit: no posting is
+    listed twice, N is not doubled, and the index equals a clean one-shot
+    build of the full corpus."""
     d = str(tmp_path / "torn_pool")
     d_ref = str(tmp_path / "torn_pool_ref")
     docs = index_build.documents_with_title(spark, sf_dir)
@@ -730,7 +793,7 @@ def test_meta_readers_survive_swap_window(spark, sf_dir, tmp_path, monkeypatch):
     held = engine.search(spark, d, Q)  # resolved, not yet run
     old_postings = set(engine.snapshot(spark, d).files["inverted_index"])
 
-    engine.compact_index(spark, d)  # replaces postings/forward/doc_stats
+    engine.compact_index(spark, d)  # replaces postings and doc_stats
     new_postings = set(engine.snapshot(spark, d).files["inverted_index"])
     assert old_postings.isdisjoint(new_postings)
     read = _input_files(held, d)
@@ -826,8 +889,8 @@ def test_empty_write_leaves_data_file(spark, tmp_path):
     """Pins the Spark behavior the layout relies on: an empty
     NON-partitioned write leaves one zero-row schema-bearing data file,
     while an empty PARTITIONED write leaves none -- so a commit of an
-    emptied index lists no postings or forward files, and reads of an
-    empty file list must not go through the parquet reader."""
+    emptied index lists no postings files, and reads of an empty file
+    list must not go through the parquet reader."""
     import glob as _glob
 
     d = str(tmp_path)
@@ -839,24 +902,10 @@ def test_empty_write_leaves_data_file(spark, tmp_path):
     assert not _glob.glob(f"{d}/part/doc_bucket=*/*.parquet")
 
 
-def test_append_raises_on_torn_vocab(spark, sf_dir, tmp_path):
-    """A committed vocab file that went missing must fail the append
-    loudly instead of merging the delta into a vocab that lost every
-    prior term's df."""
-    d = str(tmp_path / "torn")
-    docs = index_build.documents_with_title(spark, sf_dir)
-    did = F.col("doc_id").cast("long")
-    engine.build_index(docs.where(did % 2 == 0), d, n_buckets=8)
-    for p in engine.snapshot(spark, d).files["vocab"]:
-        os.remove(f"{d}/{p}")
-    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
-        engine.append_to_index(docs.where(did % 2 == 1), d)
-
-
 def test_delete_all_compact_append_lifecycle(spark, sf_dir, tmp_path):
     """The emptied index is a legitimate state end-to-end: delete EVERY
-    document, compact (the commit then lists no postings or forward
-    files), search (no hits, no error), then append a fresh corpus --
+    document, compact (the commit then lists no postings files), search
+    (no hits, no error), then append a fresh corpus --
     the result must equal a from-scratch index of the appended docs."""
     d = str(tmp_path / "emptied")
     d_ref = str(tmp_path / "ref")
@@ -866,7 +915,7 @@ def test_delete_all_compact_append_lifecycle(spark, sf_dir, tmp_path):
     engine.delete_from_index(docs.where(did % 5 == 0).select("doc_id"), d)
     engine.compact_index(spark, d)
     snap = engine.snapshot(spark, d)
-    assert snap.files["inverted_index"] == [] and snap.files["forward"] == []
+    assert snap.files["inverted_index"] == [] and snap.files["tombstones"] == []
     assert snap.total_docs == 0 and snap.avg_dl == 0.0
     assert _hits(spark, d) == []
     engine.append_to_index(docs.where(did % 5 == 1), d)
@@ -875,15 +924,15 @@ def test_delete_all_compact_append_lifecycle(spark, sf_dir, tmp_path):
     assert got == _hits(spark, d_ref) and len(got) > 0
 
 
-def test_delete_raises_on_torn_forward(spark, sf_dir, tmp_path):
-    """Committed forward files that went missing must fail the delete
-    loudly: a silently EMPTY df delta would leave vocab's doc_freq
-    counting the deleted docs (idf drift) while N gets corrected."""
-    d = str(tmp_path / "tornfwd")
+def test_delete_raises_on_torn_doc_stats(spark, sf_dir, tmp_path):
+    """Committed doc_stats files that went missing must fail the delete
+    loudly: read as silently EMPTY, they would leave the deleted docs
+    untombstoned and N uncorrected, and publish that as a delete."""
+    d = str(tmp_path / "torndocstats")
     docs = index_build.documents_with_title(spark, sf_dir)
     did = F.col("doc_id").cast("long")
     engine.build_index(docs.where(did % 2 == 0), d, n_buckets=8)
-    for p in engine.snapshot(spark, d).files["forward"]:
+    for p in engine.snapshot(spark, d).files["doc_stats"]:
         os.remove(f"{d}/{p}")
     with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
         engine.delete_from_index(docs.where(did % 4 == 0).select("doc_id"), d)
@@ -891,9 +940,9 @@ def test_delete_raises_on_torn_forward(spark, sf_dir, tmp_path):
 
 
 def test_compact_unwedges_emptied_index(spark, sf_dir, tmp_path):
-    """Tombstones acquired on an EMPTIED index (deleting ids it does not
-    hold) must be clearable: the delete commits them, compact clears
-    them, and the ids are appendable again."""
+    """An EMPTIED index cannot be wedged by tombstones: deleting ids it
+    does not hold publishes nothing, compacting it again is a no-op, and
+    the ids append directly."""
     d = str(tmp_path / "emptied")
     d_ref = str(tmp_path / "ref")
     docs = index_build.documents_with_title(spark, sf_dir)
@@ -901,12 +950,10 @@ def test_compact_unwedges_emptied_index(spark, sf_dir, tmp_path):
     engine.build_index(docs.where(did % 7 == 0), d, n_buckets=8)
     engine.delete_from_index(docs.where(did % 7 == 0).select("doc_id"), d)
     engine.compact_index(spark, d)
+    version = engine.snapshot(spark, d).version
     engine.delete_from_index(docs.where(did % 7 == 1).limit(3).select("doc_id"), d)
-    assert engine.snapshot(spark, d).files["tombstones"]
-    with pytest.raises(ValueError, match="tombstoned"):
-        engine.append_to_index(docs.where(did % 7 == 1), d)
     engine.compact_index(spark, d)
-    assert engine.snapshot(spark, d).files["tombstones"] == []
+    assert engine.snapshot(spark, d).version == version
     engine.append_to_index(docs.where(did % 7 == 1), d)
     engine.build_index(docs.where(did % 7 == 1), d_ref, n_buckets=8)
     got = _hits(spark, d)
@@ -957,9 +1004,9 @@ def fault_base(spark, sf_dir, tmp_path_factory):
 
 
 def _state(spark, d):
-    """What a reader can observe: search hits for two queries, the vocab
-    df sum, the committed counts, and the postings still on disk (which
-    compaction changes while hits stay equal)."""
+    """What a reader can observe: search hits for two queries, the df sum
+    of ``load_index``'s vocab, the committed counts, and the postings
+    still on disk (which compaction changes while hits stay equal)."""
     snap = engine.snapshot(spark, d)
     idx = engine.load_index(spark, d)
     return (
@@ -1078,8 +1125,8 @@ def test_gc_keeps_what_commits_reference(spark, sf_dir, tmp_path, monkeypatch):
     snap = engine.snapshot(spark, d)
     assert os.listdir(f"{d}/_commits") == ["2.json"]
     assert set(os.listdir(f"{d}/data")) == _op_dirs(snap)
-    # the compaction kept the delete's vocab, so two op dirs stay live
-    assert len(_op_dirs(snap)) == 2
+    # the compaction rewrote every table it lists, so one op dir stays live
+    assert len(_op_dirs(snap)) == 1
     ref = str(tmp_path / "ref")
     engine.build_index(docs.where((_did() % 2 == 0) & (_did() % 10 != 0)), ref, n_buckets=8)
     assert _hits(spark, d) == _hits(spark, ref)

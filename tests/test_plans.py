@@ -110,25 +110,25 @@ def test_persisted_search_prunes_buckets(spark, sf_dir, tmp_path):
     q = "data model"
     df = engine.search(spark, d, q)
     # the scan reads exactly the committed postings files of the query's
-    # term buckets (picked driver-side), plus vocab, doc_stats and
-    # tombstones -- no other postings file is listed or read
+    # term buckets (picked driver-side), plus doc_stats and tombstones --
+    # no other postings file is listed or read
     snap = engine.snapshot(spark, d)
     buckets = {engine.term_bucket_py(t, 8) for t in tokenize_query(q)}
     postings = {p for p in snap.files["inverted_index"] if engine._bucket(p) in buckets}
     assert 0 < len(postings) < len(snap.files["inverted_index"])
-    want = postings.union(
-        *(snap.files[t] for t in ("vocab", "doc_stats", "tombstones"))
-    )
+    want = postings.union(*(snap.files[t] for t in ("doc_stats", "tombstones")))
     assert snap.files["tombstones"]
     assert {os.path.relpath(urlparse(f).path, d) for f in df.inputFiles()} == want
 
 
 def test_persisted_search_job_budget(spark, sf_dir, tmp_path):
-    """A warm persisted search runs the vocab and doc_stats broadcasts,
-    the partial-aggregate shuffle and the result job: nothing for the
-    corpus stats (inlined literals), the titles (aggregate key) or the
-    rank (row_number on the top-k's single partition). Tombstones add
-    their broadcast."""
+    """A warm persisted search runs the shuffle of the term-filtered
+    postings for the df window, the broadcast of the doc_stats join, the
+    partial-aggregate shuffle and the result job: nothing for a df table
+    (df is counted over the postings already read), the corpus stats
+    (inlined literals), the titles (aggregate key) or the rank
+    (row_number on the top-k's single partition). Tombstones add their
+    broadcast."""
     from big_data_assignment2_spark import engine
     from big_data_assignment2_spark.operators import index_build
 

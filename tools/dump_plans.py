@@ -25,8 +25,8 @@ PICKS = [
     (
         "bm25_search_persisted",
         "term_bucket PartitionFilters (directory pruning, the Cassandra "
-        "partition-key analog) + term IN pushdown + broadcast vocab/stats "
-        "+ TakeOrderedAndProject top-k; no Python anywhere",
+        "partition-key analog) + term IN pushdown + df as a window over "
+        "the picked postings + TakeOrderedAndProject top-k; no Python anywhere",
     ),
     (
         "q3_shipping_priority",
